@@ -26,6 +26,7 @@ shim that stands a TPC-H file in for that table.
 
 from __future__ import annotations
 
+import threading
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -45,7 +46,13 @@ TABLES = (
 #    sources/deployment.py): read the materialized parquet plane — the
 #    deployment read path; NOT persisted, because measuring the real
 #    columnar scan (partition pruning, row-group skipping) is the point.
+# The snapshot bootstrap derives planes on several threads at once, so
+# get-or-build-and-persist runs under one lock per key: threads asking
+# for the same derivation share one build (and one persisted copy),
+# threads deriving different ones never wait on each other.
 _DERIVED_CACHE: dict[tuple[str, str, str], DataFrame] = {}
+_KEY_LOCKS: dict[tuple[str, str, str], threading.Lock] = {}
+_KEY_LOCKS_GUARD = threading.Lock()
 
 
 def _memoized(
@@ -57,13 +64,19 @@ def _memoized(
         session_id = str(id(spark))
     key = (session_id, sf_dir, name)
     df = _DERIVED_CACHE.get(key)
-    if df is None:
-        from hadoop_ozone_spark.sources import deployment
-
-        df = deployment.read_plane(spark, sf_dir, name)
+    if df is not None:
+        return df
+    with _KEY_LOCKS_GUARD:
+        lock = _KEY_LOCKS.setdefault(key, threading.Lock())
+    with lock:
+        df = _DERIVED_CACHE.get(key)
         if df is None:
-            df = build().persist()
-        _DERIVED_CACHE[key] = df
+            from hadoop_ozone_spark.sources import deployment
+
+            df = deployment.read_plane(spark, sf_dir, name)
+            if df is None:
+                df = build().persist()
+            _DERIVED_CACHE[key] = df
     return df
 
 

@@ -29,15 +29,31 @@ Parquet planes persist across sessions (guarded by _SUCCESS + a
 source-marker). Bucketed tables are session-catalog entries over
 external parquet paths; registration re-runs the cheap DDL per
 session, rewriting the files only when absent.
+
+The bootstrap is many small, independent Spark jobs, so it runs them
+side by side: every plane write and every bucketed-table write goes to
+one writer pool as wide as the session's ``defaultParallelism``, and
+``ensure_snapshot`` runs ``build_snapshot`` and ``register_bucketed``
+at the same time (both derive from the shim; neither needs the other's
+output). The source marker is written only once every plane has
+succeeded; the first failed write is re-raised after the writes already
+running have finished, and the queued ones never start. Each bucketed
+table is written by as many tasks as the largest divisor of ``BUCKETS``
+that fits the session's cores, each task holding a whole set of
+buckets, so the table still has exactly one file per bucket.
 """
 
 from __future__ import annotations
 
+import functools
 import os
 import time
+from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor, as_completed
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 SNAPSHOT_ENV = "SPARK_GRAFT_SNAPSHOT_DIR"
 BUCKETS = 32
@@ -53,7 +69,10 @@ BUCKETS = 32
 # the previous layout wrote (writer partitions × buckets) files (1025
 # for an 8.3 MB rm_replicas plane at sf0.1), and every scan of the
 # plane paid ~0.45s of per-file open overhead PER ACTION across the
-# whole scm query family.
+# whole scm query family. The writer width may be any divisor of
+# BUCKETS (each task then holds a whole set of buckets, see
+# ``_bucket_writers``): the files are the same, so it is not a layout
+# change.
 LAYOUT_VERSION = 8
 
 # plane name → model builder attribute; every derived table the query
@@ -135,31 +154,105 @@ def read_plane(spark: SparkSession, sf_dir: str, name: str) -> DataFrame | None:
     return spark.read.parquet(path)
 
 
-def build_snapshot(spark: SparkSession, sf_dir: str, base: str) -> dict[str, float]:
-    """Materialize every plane from the shim derivation. Idempotent:
-    skips planes whose _SUCCESS exists when the marker matches.
-    Returns per-plane build seconds."""
+@functools.cache
+def _writer_pool(width: int) -> ThreadPoolExecutor:
+    """The bootstrap's writer pool, one per process and width, so the
+    plane and bucketed-table writes that ``ensure_snapshot`` runs side
+    by side share one bound: at most ``width`` run at once."""
+    return ThreadPoolExecutor(width, thread_name_prefix="snapshot-writer")
+
+
+def _run_writes(
+    spark: SparkSession, writes: dict[str, Callable[[], None]]
+) -> dict[str, float]:
+    """Run independent writes on the writer pool; return each one's
+    seconds. The pool threads inherit the caller's job group and local
+    properties. On the first failure the queued writes are cancelled,
+    the running ones are waited for, and that failure is re-raised —
+    no write is still in flight when this returns or raises."""
+    inherit = inheritable_thread_target(spark)
+
+    def timed(write: Callable[[], None]) -> float:
+        t0 = time.time()
+        write()
+        return round(time.time() - t0, 3)
+
+    pool = _writer_pool(spark.sparkContext.defaultParallelism)
+    futures = {pool.submit(inherit(timed), write): name for name, write in writes.items()}
+    error = None
+    for fut in as_completed(futures):
+        if error is None and not fut.cancelled() and fut.exception() is not None:
+            error = fut.exception()
+            for other in futures:
+                other.cancel()
+    if error is not None:
+        raise error
+    return {name: fut.result() for fut, name in futures.items()}
+
+
+def _write_plane(spark: SparkSession, sf_dir: str, path: str, name: str) -> None:
     from hadoop_ozone_spark import model
     from hadoop_ozone_spark.sources.snapshot import write_snapshot
 
+    build = getattr(model, f"_build_{name}", None)
+    df = build(spark, sf_dir) if build is not None else getattr(model, name)(spark, sf_dir)
+    if name == "om_keys":
+        write_snapshot(df, path)  # partitionBy(volume,bucket), key-sorted
+    else:
+        df.write.mode("overwrite").option("compression", "zstd").parquet(path)
+
+
+def build_snapshot(spark: SparkSession, sf_dir: str, base: str) -> dict[str, float]:
+    """Materialize every plane from the shim derivation, the planes in
+    parallel on the writer pool. Idempotent: skips planes whose _SUCCESS
+    exists when the marker matches. Writes the marker only after every
+    plane has succeeded. Returns per-plane build seconds."""
     os.makedirs(base, exist_ok=True)
     fresh = not is_built(base, sf_dir)
-    timings: dict[str, float] = {}
+    writes = {}
     for name in PLANES:
         path = plane_path(base, name)
         if not fresh and os.path.exists(os.path.join(path, "_SUCCESS")):
             continue
-        t0 = time.time()
-        df = getattr(model, f"_build_{name}", None)
-        df = df(spark, sf_dir) if df is not None else getattr(model, name)(spark, sf_dir)
-        if name == "om_keys":
-            write_snapshot(df, path)  # partitionBy(volume,bucket), key-sorted
-        else:
-            df.write.mode("overwrite").option("compression", "zstd").parquet(path)
-        timings[name] = round(time.time() - t0, 3)
+        writes[name] = functools.partial(_write_plane, spark, sf_dir, path, name)
+    timings = _run_writes(spark, writes)
     with open(_marker_path(base), "w") as fh:
         fh.write(f"{os.path.normpath(sf_dir)}@v{LAYOUT_VERSION}")
     return timings
+
+
+def _bucket_writers(spark: SparkSession) -> int:
+    """Writer tasks per bucketed table: the largest divisor of BUCKETS
+    that fits the session's cores. Because it divides BUCKETS,
+    ``pmod(murmur3(c), k) == pmod(murmur3(c), BUCKETS) mod k``, so the
+    repartition sends every bucket whole to one task, and the table
+    still gets exactly one file per bucket."""
+    cores = spark.sparkContext.defaultParallelism
+    return max(k for k in range(1, BUCKETS + 1) if BUCKETS % k == 0 and k <= cores)
+
+
+def _write_bucketed(
+    spark: SparkSession, sf_dir: str, table: str, source: str, path: str
+) -> None:
+    from hadoop_ozone_spark import model
+
+    (
+        getattr(model, source)(spark, sf_dir)
+        # ONE file per bucket (guide §6): repartition by the bucket key
+        # into a divisor of numBuckets — the repartition hash
+        # (pmod(murmur3, n)) is the bucket-id function reduced mod n, so
+        # each writer task holds a whole set of buckets and writes one
+        # file for each. Without this the write fans out to (writer
+        # partitions × buckets) tiny files and every scan pays the
+        # per-file open cost per action.
+        .repartition(_bucket_writers(spark), F.col("container_id"))
+        .write.mode("overwrite")
+        .option("path", path)
+        .option("compression", "zstd")
+        .bucketBy(BUCKETS, "container_id")
+        .sortBy("container_id")
+        .saveAsTable(table)
+    )
 
 
 def register_bucketed(
@@ -168,12 +261,13 @@ def register_bucketed(
     """Create the container-co-located bucketed tables in the session
     catalog (external parquet under the snapshot dir). Files are
     rewritten only when absent (or when ``force`` says the snapshot was
-    rebuilt for a new layout version); registration itself is cheap DDL
-    that must run once per session (the in-memory catalog does not
-    persist)."""
+    rebuilt for a new layout version), the rewrites in parallel on the
+    writer pool; registration itself is cheap DDL that must run once per
+    session (the in-memory catalog does not persist)."""
     from hadoop_ozone_spark import model
 
     timings: dict[str, float] = {}
+    writes = {}
     for table, source in BUCKETED.items():
         path = plane_path(base, table)
         t0 = time.time()
@@ -193,34 +287,27 @@ def register_bucketed(
                 f"CLUSTERED BY (container_id) SORTED BY (container_id) "
                 f"INTO {BUCKETS} BUCKETS"
             )
+            timings[table] = round(time.time() - t0, 3)
         else:
-            (
-                getattr(model, source)(spark, sf_dir)
-                # ONE file per bucket (guide §6): repartition by the
-                # bucket key with numPartitions == numBuckets — the
-                # repartition hash (pmod(murmur3, n)) IS the bucket-id
-                # function, so each writer task holds exactly one
-                # bucket. Without this the write fans out to (writer
-                # partitions × buckets) tiny files and every scan pays
-                # the per-file open cost per action.
-                .repartition(BUCKETS, F.col("container_id"))
-                .write.mode("overwrite")
-                .option("path", path)
-                .option("compression", "zstd")
-                .bucketBy(BUCKETS, "container_id")
-                .sortBy("container_id")
-                .saveAsTable(table)
+            writes[table] = functools.partial(
+                _write_bucketed, spark, sf_dir, table, source, path
             )
-        timings[table] = round(time.time() - t0, 3)
+    timings.update(_run_writes(spark, writes))
     return timings
 
 
 def ensure_snapshot(spark: SparkSession, sf_dir: str, base: str) -> dict[str, float]:
     """Build-if-missing + register: the bench/deployment warmup step.
+    The planes and the bucketed tables are built side by side, their
+    writes sharing the writer pool; neither needs the other's output.
     Sets the routing flag so subsequent ``model`` loads read the
     snapshot. Returns build timings (empty when everything existed)."""
     fresh = not is_built(base, sf_dir)
-    timings = build_snapshot(spark, sf_dir, base)
-    timings.update(register_bucketed(spark, sf_dir, base, force=fresh))
+    with ThreadPoolExecutor(1, thread_name_prefix="snapshot-bucketed") as side:
+        tables = side.submit(
+            inheritable_thread_target(spark)(register_bucketed), spark, sf_dir, base, fresh
+        )
+        timings = build_snapshot(spark, sf_dir, base)
+    timings.update(tables.result())
     os.environ[SNAPSHOT_ENV] = base
     return timings
