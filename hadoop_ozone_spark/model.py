@@ -32,6 +32,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hadoop_ozone_spark import scratch
+
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
 ).split()
@@ -58,11 +60,7 @@ _KEY_LOCKS_GUARD = threading.Lock()
 def _memoized(
     name: str, spark: SparkSession, sf_dir: str, build: Callable[[], DataFrame]
 ) -> DataFrame:
-    try:
-        session_id = spark.sparkContext.applicationId
-    except Exception:  # Spark Connect has no sparkContext
-        session_id = str(id(spark))
-    key = (session_id, sf_dir, name)
+    key = (scratch._session_key(spark), sf_dir, name)
     df = _DERIVED_CACHE.get(key)
     if df is not None:
         return df

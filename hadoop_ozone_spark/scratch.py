@@ -53,6 +53,11 @@ from typing import Callable
 
 from pyspark.sql import DataFrame
 
+try:
+    from pyspark.sql.connect.session import SparkSession as _ConnectSession
+except ImportError:  # Connect's client deps (grpc) are absent: no Connect session can exist
+    _ConnectSession = None
+
 # (session_key, tag) → slot list / cursor
 _SLOTS: dict[tuple[str, str], list[DataFrame]] = {}
 _CURSOR: dict[tuple[str, str], int] = {}
@@ -75,11 +80,14 @@ _NO_MEMO_ENV = "SPARK_GRAFT_NO_MEMO"
 
 
 def _session_key(df_or_spark) -> str:
+    """The registry key of a frame's (or a session's) SparkSession: a
+    classic session's application id, a Spark Connect session's server
+    session id (Connect has no sparkContext). A stopped classic session
+    raises here instead of being keyed as a new one."""
     spark = getattr(df_or_spark, "sparkSession", df_or_spark)
-    try:
-        return spark.sparkContext.applicationId
-    except Exception:  # Spark Connect has no sparkContext
-        return str(id(spark))
+    if _ConnectSession is not None and isinstance(spark, _ConnectSession):
+        return spark.session_id
+    return spark.sparkContext.applicationId
 
 
 def fresh(tag: str, spark=None) -> None:

@@ -21,9 +21,18 @@ the query layer (``model``) reads the materialized tables whenever the
 
 At 100 TB the same two layouts are the design: the namespace sorted
 within (volume, bucket) partitions, and the container index bucketed
-on container_id so replica/health/key-listing joins co-locate. Bucket
-count scales with the cluster (32 here ≈ local cores; ~4096 at 1000
-executors) — the invariant is both join sides share it.
+on container_id so replica/health/key-listing joins co-locate. The
+bucket count is sized to the data once per snapshot build
+(``bucket_count``): the largest power of two ≤ min(MAX_BUCKETS, input
+bytes / ``spark.sql.files.maxPartitionBytes``), at least 1, so a bucket
+holds about what one plain-scan split holds. Every scan of a bucketed
+table starts one task per bucket, so a fixed 32 made a few-kilobyte
+plane cost 32 task launches per scan; every input in this repository
+gets one bucket, and inputs from 4 GiB up keep 32. All six tables share
+the count — the invariant is that both join sides share it — and the
+count is recorded in each table's directory name (``bucketed_path``),
+so registering existing files declares the count they were written
+with instead of working it out again.
 
 Parquet planes persist across sessions (guarded by _SUCCESS + a
 source-marker). Bucketed tables are session-catalog entries over
@@ -38,8 +47,8 @@ at the same time (both derive from the shim; neither needs the other's
 output). The source marker is written only once every plane has
 succeeded; the first failed write is re-raised after the writes already
 running have finished, and the queued ones never start. Each bucketed
-table is written by as many tasks as the largest divisor of ``BUCKETS``
-that fits the session's cores, each task holding a whole set of
+table is written by as many tasks as the largest divisor of its bucket
+count that fits the session's cores, each task holding a whole set of
 buckets, so the table still has exactly one file per bucket.
 """
 
@@ -47,6 +56,8 @@ from __future__ import annotations
 
 import functools
 import os
+import re
+import shutil
 import time
 from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor, as_completed
@@ -56,7 +67,9 @@ from pyspark.sql import functions as F
 from pyspark.util import inheritable_thread_target
 
 SNAPSHOT_ENV = "SPARK_GRAFT_SNAPSHOT_DIR"
-BUCKETS = 32
+# the bucket-count cap; a power of two, so every count ``bucket_count``
+# returns divides it
+MAX_BUCKETS = 32
 
 # Bump when any plane's schema/derivation changes: the marker embeds it,
 # so a snapshot written by an older layout reads as not-built and is
@@ -69,11 +82,17 @@ BUCKETS = 32
 # the previous layout wrote (writer partitions × buckets) files (1025
 # for an 8.3 MB rm_replicas plane at sf0.1), and every scan of the
 # plane paid ~0.45s of per-file open overhead PER ACTION across the
-# whole scm query family. The writer width may be any divisor of
-# BUCKETS (each task then holds a whole set of buckets, see
+# whole scm query family. The writer width may be any divisor of the
+# bucket count (each task then holds a whole set of buckets, see
 # ``_bucket_writers``): the files are the same, so it is not a layout
 # change.
-LAYOUT_VERSION = 8
+# v9: the bucket count is sized to the input (``bucket_count``) instead
+# of a fixed 32 and recorded in each bucketed table's directory name
+# (``<table>.b<n>``); every scan started one task per bucket, and at
+# the repository's input sizes those 32-task stages were most of the
+# scm planners' cost. A v8 snapshot's 32-bucket tables are dropped and
+# rewritten through the ``force`` path.
+LAYOUT_VERSION = 9
 
 # plane name → model builder attribute; every derived table the query
 # layer can route to the snapshot
@@ -221,21 +240,72 @@ def build_snapshot(spark: SparkSession, sf_dir: str, base: str) -> dict[str, flo
     return timings
 
 
-def _bucket_writers(spark: SparkSession) -> int:
-    """Writer tasks per bucketed table: the largest divisor of BUCKETS
-    that fits the session's cores. Because it divides BUCKETS,
-    ``pmod(murmur3(c), k) == pmod(murmur3(c), BUCKETS) mod k``, so the
-    repartition sends every bucket whole to one task, and the table
-    still gets exactly one file per bucket."""
+def bucket_count(input_bytes: int, split_bytes: int) -> int:
+    """Buckets for a snapshot whose inputs total ``input_bytes``: the
+    largest power of two ≤ min(MAX_BUCKETS, input_bytes // split_bytes),
+    and at least 1, so a bucket holds about what one plain-scan split
+    holds. Being a power of two ≤ MAX_BUCKETS, it divides MAX_BUCKETS."""
+    fit = max(1, min(MAX_BUCKETS, input_bytes // split_bytes))
+    return 1 << (fit.bit_length() - 1)
+
+
+def data_bucket_count(spark: SparkSession, sf_dir: str) -> int:
+    """The bucket count the inputs under ``sf_dir`` earn, one split
+    being the session's ``spark.sql.files.maxPartitionBytes``."""
+    input_bytes = sum(
+        os.path.getsize(os.path.join(d, f)) for d, _, fs in os.walk(sf_dir) for f in fs
+    )
+    split_bytes = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    return bucket_count(input_bytes, split_bytes)
+
+
+def bucketed_path(base: str, table: str, buckets: int) -> str:
+    """Where ``table``'s files live when written with ``buckets``
+    buckets: the count is part of the directory name."""
+    return os.path.join(base, f"{table}.b{buckets}")
+
+
+def _table_dirs(base: str, table: str) -> dict[str, int | None]:
+    """Every directory under ``base`` holding a copy of ``table``, with
+    the bucket count its name records (None for an unversioned v8
+    directory)."""
+    pattern = re.compile(rf"{re.escape(table)}(?:\.b(\d+))?")
+    names = os.listdir(base) if os.path.isdir(base) else []
+    return {
+        os.path.join(base, name): int(m.group(1)) if m.group(1) else None
+        for name in names
+        if (m := pattern.fullmatch(name))
+    }
+
+
+def written_buckets(base: str, table: str) -> int | None:
+    """The bucket count ``table``'s complete files under ``base`` were
+    written with, or None when there is no complete copy."""
+    for path, buckets in _table_dirs(base, table).items():
+        if buckets is not None and os.path.exists(os.path.join(path, "_SUCCESS")):
+            return buckets
+    return None
+
+
+def _bucket_writers(spark: SparkSession, buckets: int) -> int:
+    """Writer tasks per bucketed table: the largest divisor of
+    ``buckets`` that fits the session's cores. Because it divides
+    ``buckets``, ``pmod(murmur3(c), k) == pmod(murmur3(c), buckets) mod
+    k``, so the repartition sends every bucket whole to one task, and
+    the table still gets exactly one file per bucket."""
     cores = spark.sparkContext.defaultParallelism
-    return max(k for k in range(1, BUCKETS + 1) if BUCKETS % k == 0 and k <= cores)
+    return max(k for k in range(1, buckets + 1) if buckets % k == 0 and k <= cores)
 
 
 def _write_bucketed(
-    spark: SparkSession, sf_dir: str, table: str, source: str, path: str
+    spark: SparkSession, sf_dir: str, table: str, source: str, base: str, buckets: int
 ) -> None:
     from hadoop_ozone_spark import model
 
+    # one copy per table: a copy at another count would make the count
+    # registration reads back ambiguous
+    for stale in _table_dirs(base, table):
+        shutil.rmtree(stale)
     (
         getattr(model, source)(spark, sf_dir)
         # ONE file per bucket (guide §6): repartition by the bucket key
@@ -245,11 +315,11 @@ def _write_bucketed(
         # file for each. Without this the write fans out to (writer
         # partitions × buckets) tiny files and every scan pays the
         # per-file open cost per action.
-        .repartition(_bucket_writers(spark), F.col("container_id"))
+        .repartition(_bucket_writers(spark, buckets), F.col("container_id"))
         .write.mode("overwrite")
-        .option("path", path)
+        .option("path", bucketed_path(base, table, buckets))
         .option("compression", "zstd")
-        .bucketBy(BUCKETS, "container_id")
+        .bucketBy(buckets, "container_id")
         .sortBy("container_id")
         .saveAsTable(table)
     )
@@ -263,19 +333,28 @@ def register_bucketed(
     rewritten only when absent (or when ``force`` says the snapshot was
     rebuilt for a new layout version), the rewrites in parallel on the
     writer pool; registration itself is cheap DDL that must run once per
-    session (the in-memory catalog does not persist)."""
+    session (the in-memory catalog does not persist).
+
+    All tables share one bucket count, so their joins stay co-located:
+    the count the existing files were written with, read back from
+    their directory names, or — for a fresh snapshot, or existing files
+    that disagree — the count the data earns (``data_bucket_count``).
+    Existing files are always declared with the count they were written
+    with; files at any other count are rewritten."""
     from hadoop_ozone_spark import model
 
+    written = {} if force else {t: written_buckets(base, t) for t in BUCKETED}
+    known = {n for n in written.values() if n is not None}
+    buckets = known.pop() if len(known) == 1 else data_bucket_count(spark, sf_dir)
     timings: dict[str, float] = {}
     writes = {}
     for table, source in BUCKETED.items():
-        path = plane_path(base, table)
         t0 = time.time()
         if force:
             spark.sql(f"DROP TABLE IF EXISTS {table}")
         elif spark.catalog.tableExists(table):
             continue
-        if not force and os.path.exists(os.path.join(path, "_SUCCESS")):
+        if written.get(table) == buckets:
             # register the existing bucketed files without rewriting
             src_df = getattr(model, source)(spark, sf_dir)
             cols = ", ".join(
@@ -283,14 +362,14 @@ def register_bucketed(
             )
             spark.sql(
                 f"CREATE TABLE {table} ({cols}) USING parquet "
-                f"OPTIONS (path '{path}') "
+                f"OPTIONS (path '{bucketed_path(base, table, buckets)}') "
                 f"CLUSTERED BY (container_id) SORTED BY (container_id) "
-                f"INTO {BUCKETS} BUCKETS"
+                f"INTO {buckets} BUCKETS"
             )
             timings[table] = round(time.time() - t0, 3)
         else:
             writes[table] = functools.partial(
-                _write_bucketed, spark, sf_dir, table, source, path
+                _write_bucketed, spark, sf_dir, table, source, base, buckets
             )
     timings.update(_run_writes(spark, writes))
     return timings

@@ -1,7 +1,9 @@
 """Snapshot bootstrap under concurrency: the derived-table memo builds
 each plane once however many threads ask, a failed plane write fails
 ``ensure_snapshot`` loudly and leaves nothing half-built or still
-writing, and a snapshot of an older layout is rebuilt whole."""
+writing, a snapshot of an older layout is rebuilt whole, and existing
+bucketed files are registered at the bucket count they were written
+with."""
 
 from __future__ import annotations
 
@@ -12,6 +14,7 @@ import time
 from concurrent.futures import ThreadPoolExecutor
 
 import pytest
+from pyspark.sql import functions as F
 
 from hadoop_ozone_spark import model
 from hadoop_ozone_spark.sources import deployment
@@ -27,8 +30,14 @@ def shim_mode(spark):
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
 
 
+def _root(base: str, name: str) -> str:
+    if name in deployment.BUCKETED:
+        return deployment.bucketed_path(base, name, deployment.written_buckets(base, name))
+    return deployment.plane_path(base, name)
+
+
 def _parts(base: str, name: str) -> set[str]:
-    root = deployment.plane_path(base, name)
+    root = _root(base, name)
     return {
         os.path.relpath(os.path.join(d, f), root)
         for d, _, fs in os.walk(root)
@@ -108,8 +117,11 @@ def test_stale_layout_rebuilds_every_plane_and_table(spark, sf_dir, tmp_path, mo
     deployment.ensure_snapshot(spark, sf_dir, base)
     names = (*deployment.PLANES, *deployment.BUCKETED)
     old = {name: _parts(base, name) for name in names}
+    # a v8 snapshot: bucketed-table directories carry no bucket count
+    for table in deployment.BUCKETED:
+        os.rename(_root(base, table), deployment.plane_path(base, table))
     with open(os.path.join(base, "_SOURCE_SF_DIR"), "w") as fh:
-        fh.write(f"{os.path.normpath(sf_dir)}@v7")
+        fh.write(f"{os.path.normpath(sf_dir)}@v8")
     assert deployment.is_built(base, sf_dir) is False
 
     forced, statements = [], []
@@ -136,3 +148,52 @@ def test_stale_layout_rebuilds_every_plane_and_table(spark, sf_dir, tmp_path, mo
         assert new and not (new & old[name]), f"{name} was not rewritten"
     for table in deployment.BUCKETED:
         assert spark.catalog.tableExists(table)
+        assert not os.path.exists(deployment.plane_path(base, table))  # v8 copy removed
+
+
+def _table_info(spark, table: str) -> dict[str, str]:
+    rows = spark.sql(f"DESCRIBE TABLE EXTENDED {table}").collect()
+    return {r.col_name: r.data_type for r in rows}
+
+
+def test_registration_declares_the_written_bucket_count(spark, sf_dir, tmp_path):
+    base = str(tmp_path / "snapshot")
+    deployment.register_bucketed(spark, sf_dir, base)
+    first = deployment.data_bucket_count(spark, sf_dir)
+    rows = {t: sorted(spark.table(t).collect(), key=repr) for t in deployment.BUCKETED}
+    for table in deployment.BUCKETED:
+        spark.sql(f"DROP TABLE {table}")
+
+    # a smaller split target makes the same data earn more buckets
+    input_bytes = sum(
+        os.path.getsize(os.path.join(d, f)) for d, _, fs in os.walk(sf_dir) for f in fs
+    )
+    conf = "spark.sql.files.maxPartitionBytes"
+    split = spark.conf.get(conf)
+    spark.conf.set(conf, str(input_bytes // (4 * first)))
+    try:
+        assert deployment.data_bucket_count(spark, sf_dir) == 4 * first
+        deployment.register_bucketed(spark, sf_dir, base)
+    finally:
+        spark.conf.set(conf, split)
+
+    declared = {t: int(_table_info(spark, t)["Num Buckets"]) for t in deployment.BUCKETED}
+    assert len(set(declared.values())) == 1  # still co-located
+    for table, buckets in declared.items():
+        # the files under the declared location were written with the
+        # declared count: every row sits in its pmod(hash, n) bucket file
+        location = _table_info(spark, table)["Location"]
+        assert location.endswith(f"{table}.b{buckets}"), table
+        misplaced = (
+            spark.read.parquet(location)
+            .select(
+                F.expr(f"pmod(hash(container_id), {buckets})").alias("want"),
+                F.regexp_extract("_metadata.file_name", r"_(\d+)(?:\..*)?$", 1)
+                .cast("int")
+                .alias("got"),
+            )
+            .filter("want != got")
+            .count()
+        )
+        assert misplaced == 0, table
+        assert sorted(spark.table(table).collect(), key=repr) == rows[table], table

@@ -119,26 +119,74 @@ def test_j1_keys_scan_stays_broadcast_only(spark, sf_dir, snapshot):
 BUCKET_ID = r"_(\d+)(?:\..*)?$"
 
 
-def test_bucketed_tables_have_one_sorted_file_per_bucket(spark, snapshot):
-    # the writer width is any divisor of BUCKETS (a whole set of buckets
-    # per task); the file layout must not depend on it
-    for table in deployment.BUCKETED:
-        path = deployment.plane_path(snapshot["base"], table)
-        files = sorted(f for f in os.listdir(path) if f.endswith(".parquet"))
-        ids = [int(re.search(BUCKET_ID, f).group(1)) for f in files]
-        assert files and len(ids) == len(set(ids)), table
-        assert all(0 <= b < deployment.BUCKETS for b in ids), table
-        misplaced = (
-            spark.read.parquet(path)
-            .select(
-                F.expr(f"pmod(hash(container_id), {deployment.BUCKETS})").alias("want"),
-                F.regexp_extract("_metadata.file_name", BUCKET_ID, 1).cast("int").alias("got"),
-            )
-            .filter("want != got")
-            .count()
+def _assert_one_sorted_file_per_bucket(spark, path: str, buckets: int) -> None:
+    files = sorted(f for f in os.listdir(path) if f.endswith(".parquet"))
+    ids = [int(re.search(BUCKET_ID, f).group(1)) for f in files]
+    assert files and len(ids) == len(set(ids)), path
+    assert all(0 <= b < buckets for b in ids), path
+    misplaced = (
+        spark.read.parquet(path)
+        .select(
+            F.expr(f"pmod(hash(container_id), {buckets})").alias("want"),
+            F.regexp_extract("_metadata.file_name", BUCKET_ID, 1).cast("int").alias("got"),
         )
-        assert misplaced == 0, table
-        for f in files:
-            cids = pq.read_table(os.path.join(path, f), columns=["container_id"])
-            cids = cids.column(0).to_pylist()
-            assert cids == sorted(cids), (table, f)
+        .filter("want != got")
+        .count()
+    )
+    assert misplaced == 0, path
+    for f in files:
+        cids = pq.read_table(os.path.join(path, f), columns=["container_id"])
+        cids = cids.column(0).to_pylist()
+        assert cids == sorted(cids), (path, f)
+
+
+def _declared_buckets(spark, table: str) -> int:
+    rows = spark.sql(f"DESCRIBE TABLE EXTENDED {table}").collect()
+    return int(next(r.data_type for r in rows if r.col_name == "Num Buckets"))
+
+
+def test_bucket_count_rule():
+    split = 128 * 1024 * 1024
+    assert deployment.bucket_count(0, split) == 1
+    assert deployment.bucket_count(2 * split - 1, split) == 1
+    assert deployment.bucket_count(2 * split, split) == 2
+    assert deployment.bucket_count(5 * split, split) == 4
+    assert deployment.bucket_count(32 * split, split) == 32
+    assert deployment.bucket_count(1000 * split, split) == 32
+    for input_bytes in range(0, 70 * split, split // 3):
+        n = deployment.bucket_count(input_bytes, split)
+        assert n & (n - 1) == 0 and deployment.MAX_BUCKETS % n == 0, input_bytes
+
+
+@pytest.mark.parametrize("buckets", ["derived", 32])
+def test_bucketed_tables_have_one_sorted_file_per_bucket(
+    spark, sf_dir, snapshot, tmp_path, buckets
+):
+    # the writer width is any divisor of the bucket count (a whole set of
+    # buckets per task); the file layout must not depend on it
+    if buckets == "derived":
+        # the snapshot's six tables, all at the count the data earns
+        n = deployment.data_bucket_count(spark, sf_dir)
+        for table in deployment.BUCKETED:
+            assert _declared_buckets(spark, table) == n, table
+            path = deployment.bucketed_path(snapshot["base"], table, n)
+            _assert_one_sorted_file_per_bucket(spark, path, n)
+        return
+    # the at-scale count, on one table written from the fixture data
+    table = "rm_replicas_at_scale"
+    try:
+        deployment._write_bucketed(
+            spark, sf_dir, table, "rm_replicas", str(tmp_path), buckets
+        )
+        assert _declared_buckets(spark, table) == buckets
+        path = deployment.bucketed_path(str(tmp_path), table, buckets)
+        _assert_one_sorted_file_per_bucket(spark, path, buckets)
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
+
+
+def test_bucketed_scan_fans_out_to_the_bucket_count(spark, sf_dir, snapshot):
+    # one scan task per bucket: the count the data earns, not a fixed 32
+    n = deployment.data_bucket_count(spark, sf_dir)
+    assert n == 1  # well under 2 × the 128 MB split
+    assert model.rm_replicas_bucketed(spark, sf_dir).rdd.getNumPartitions() == n

@@ -185,3 +185,38 @@ def test_keep_ckpt_replacement_drops_result_memos(spark):
     r2 = scratch.keep_result("t_ck_res", spark.range(100), _b)
     assert len(calls) == 2 and r2 is not r1
     r2.count()  # and the rebuilt frame is actionable
+
+
+def test_session_key_detects_spark_connect_explicitly(spark, monkeypatch):
+    from hadoop_ozone_spark import model
+    from hadoop_ozone_spark.sources import deployment
+
+    class StubConnectSession:
+        session_id = "connect-session-7"
+
+        @property
+        def sparkContext(self):
+            raise AssertionError("a Spark Connect session has no sparkContext")
+
+    class StubFrame:
+        sparkSession = StubConnectSession()
+
+        def persist(self):
+            return self
+
+    monkeypatch.setattr(scratch, "_ConnectSession", StubConnectSession)
+    monkeypatch.delenv(deployment.SNAPSHOT_ENV, raising=False)
+    frame = StubFrame()
+    assert scratch._session_key(frame.sparkSession) == "connect-session-7"
+    assert scratch._session_key(frame) == "connect-session-7"
+    # the derived-plane memo keys a Connect session the same way
+    key = ("connect-session-7", "/stub/sf", "stub_plane")
+    try:
+        plane = model._memoized("stub_plane", frame.sparkSession, "/stub/sf", lambda: frame)
+        assert plane is frame
+        assert model._DERIVED_CACHE[key] is frame
+    finally:
+        model._DERIVED_CACHE.pop(key, None)
+        model._KEY_LOCKS.pop(key, None)
+    # a classic session is still keyed by its application id
+    assert scratch._session_key(spark) == spark.sparkContext.applicationId

@@ -1,11 +1,12 @@
 """Capture .explain("formatted") for named headline queries.
 
-Usage: python tools/capture_plans.py <suffix> [query ...]
+Usage: python tools/capture_plans.py <out_dir> <suffix> [query ...]
 
-Writes plans/r13/<query>_<suffix>.txt for each query (all bench
-HEADLINE queries when none are named). Plan capture is driver-side
-only (no job runs), so it is cheap; it uses the same snapshot read
-path as bench.py so the captured plans are the plans the bench times.
+Writes <out_dir>/<query>_<suffix>.txt (e.g. ``plans/r15``) for each
+query, all bench HEADLINE queries when none are named. Plan capture is
+driver-side only (no job runs), so it is cheap; it uses the same
+snapshot read path as bench.py so the captured plans are the plans the
+bench times.
 """
 
 from __future__ import annotations
@@ -23,8 +24,10 @@ from hadoop_ozone_spark.sources import deployment  # noqa: E402
 
 
 def main() -> int:
-    suffix = sys.argv[1] if len(sys.argv) > 1 else "before"
-    names = sys.argv[2:]
+    if len(sys.argv) < 3:
+        print(__doc__.strip().splitlines()[2])
+        return 2
+    out_dir, suffix, names = sys.argv[1], sys.argv[2], sys.argv[3:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("capture-plans")
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -37,7 +40,6 @@ def main() -> int:
     qs = entrymod.queries()
     if not names:
         names = [n for n in bench.HEADLINE if n in qs]
-    out_dir = os.path.join(repo, "plans", "r13")
     os.makedirs(out_dir, exist_ok=True)
     for name in names:
         fn = qs.get(name)
