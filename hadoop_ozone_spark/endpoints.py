@@ -6,6 +6,17 @@ Each endpoint is a named composition of operators over the namespace
 tables; nothing here adds logic — it fixes the public API a reference
 user would migrate to. Signatures mirror the reference calls cited in
 each docstring.
+
+Serving: Ozone answers each of these as one RPC, and the facade keeps a
+request close to one Spark job. A batch frame whose size estimate is at
+most the smallest scan split (``deployment.min_split_bytes``: Spark
+never cuts so small a plane for its size) is served from ONE partition
+(``coalesce(1)``): a single partition already satisfies the
+distribution a groupBy, distinct, window or orderBy needs, so the plan
+has no shuffle Exchange and no range-sampling job, while filters still
+push below the coalesce (partition pruning and parquet pushdown stay).
+Larger frames, frames Spark cannot size and streaming frames keep their
+partitioning and plans.
 """
 
 from __future__ import annotations
@@ -14,12 +25,26 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hadoop_ozone_spark.operators import cdc, listing, recon, s3, scm, security
+from hadoop_ozone_spark.sources.deployment import min_split_bytes
+
+
+def _serving_frame(df: DataFrame | None) -> DataFrame | None:
+    """``df`` in one partition when Catalyst sizes it at no more than the
+    smallest scan split, else ``df`` unchanged (unknown sizes read as the
+    huge ``spark.sql.defaultSizeInBytes``; streaming frames are left
+    alone). Larger frames keep the scan parallelism Spark plans for them,
+    since ``coalesce(1)`` would collapse the scan too."""
+    if df is None or df.isStreaming:
+        return df
+    size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    return df.coalesce(1) if size <= min_split_bytes(df.sparkSession) else df
 
 
 class OzoneAnalytics:
     """Facade over a namespace snapshot + CDC feed, the engine's public
     API. ``keys`` is the keyTable DataFrame (from ``model.om_keys`` in
-    tests or ``sources.snapshot.read_snapshot`` in deployment)."""
+    tests or ``sources.snapshot.read_snapshot`` in deployment). Every
+    frame given is held as ``_serving_frame`` sizes it."""
 
     def __init__(
         self,
@@ -36,16 +61,16 @@ class OzoneAnalytics:
         audit: DataFrame | None = None,
     ):
         self.spark = spark
-        self.keys = keys
-        self.containers = containers
-        self.replicas = replicas
-        self.events = events
-        self.datanodes = datanodes
-        self.pipelines = pipelines
-        self.pipeline_members = pipeline_members
-        self.replica_observations = replica_observations
-        self.deleted_block_txns = deleted_block_txns
-        self.audit = audit
+        self.keys = _serving_frame(keys)
+        self.containers = _serving_frame(containers)
+        self.replicas = _serving_frame(replicas)
+        self.events = _serving_frame(events)
+        self.datanodes = _serving_frame(datanodes)
+        self.pipelines = _serving_frame(pipelines)
+        self.pipeline_members = _serving_frame(pipeline_members)
+        self.replica_observations = _serving_frame(replica_observations)
+        self.deleted_block_txns = _serving_frame(deleted_block_txns)
+        self.audit = _serving_frame(audit)
 
     # --- OM read RPCs -----------------------------------------------------
 

@@ -77,6 +77,9 @@ _RESULT_SLOTS: dict[tuple[str, str, str], tuple[DataFrame, DataFrame]] = {}
 # they are the within-query cache discipline the bench has always
 # measured, not a result cache.
 _NO_MEMO_ENV = "SPARK_GRAFT_NO_MEMO"
+# the values that switch it on; any other value, "0" and "" included,
+# leaves the memo on
+_TRUTHY = ("1", "true", "yes", "on")
 
 
 def _session_key(df_or_spark) -> str:
@@ -245,10 +248,11 @@ def keep_result(
     never be routed through here — see :func:`invalidate` for the
     explicit staleness hook a mutable-source caller would need.
 
-    ``SPARK_GRAFT_NO_MEMO=1`` disables the memo entirely (every call
-    rebuilds): the bench's steady-state timings run under it so they
-    measure computation, not memo hits (VERDICT r13 #1)."""
-    if os.environ.get(_NO_MEMO_ENV):
+    ``SPARK_GRAFT_NO_MEMO=1`` (or true/yes/on) disables the memo
+    entirely (every call rebuilds): the bench's steady-state timings
+    run under it so they measure computation, not memo hits (VERDICT
+    r13 #1)."""
+    if os.environ.get(_NO_MEMO_ENV, "").strip().lower() in _TRUTHY:
         return build()
     skey = _session_key(key_df)
     _purge_stopped_sessions(key_df.sparkSession, skey)

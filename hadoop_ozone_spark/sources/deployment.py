@@ -14,9 +14,10 @@ the query layer (``model``) reads the materialized tables whenever the
   partition pruning + row-group prefix skipping (the RocksDB seek
   analogues, SURVEY §4);
 - ``om_keys_by_container`` + ``containers`` + ``container_replicas``:
-  ``bucketBy(32, container_id)`` catalog tables → the J1/J2/J4
-  container joins and aggregations run with ZERO shuffle Exchanges
-  (co-located, the ContainerKeyMapper inverted-index layout);
+  ``bucketBy(n, container_id)`` catalog tables, n sized to the data
+  (see below) → the J1/J2/J4 container joins and aggregations run with
+  ZERO shuffle Exchanges (co-located, the ContainerKeyMapper
+  inverted-index layout);
 - every other plane as plain parquet.
 
 At 100 TB the same two layouts are the design: the namespace sorted
@@ -240,23 +241,40 @@ def build_snapshot(spark: SparkSession, sf_dir: str, base: str) -> dict[str, flo
     return timings
 
 
-def bucket_count(input_bytes: int, split_bytes: int) -> int:
+def bucket_count(input_bytes: int, split: int) -> int:
     """Buckets for a snapshot whose inputs total ``input_bytes``: the
-    largest power of two ≤ min(MAX_BUCKETS, input_bytes // split_bytes),
-    and at least 1, so a bucket holds about what one plain-scan split
-    holds. Being a power of two ≤ MAX_BUCKETS, it divides MAX_BUCKETS."""
-    fit = max(1, min(MAX_BUCKETS, input_bytes // split_bytes))
+    largest power of two ≤ min(MAX_BUCKETS, input_bytes // split), and
+    at least 1, so a bucket holds about what one plain-scan split of
+    ``split`` bytes holds. Being a power of two ≤ MAX_BUCKETS, it
+    divides MAX_BUCKETS."""
+    fit = max(1, min(MAX_BUCKETS, input_bytes // split))
     return 1 << (fit.bit_length() - 1)
+
+
+def split_bytes(spark: SparkSession) -> int:
+    """One scan split: the session's ``spark.sql.files.maxPartitionBytes``,
+    the most a plain file scan puts in one task. The unit the bucket
+    count sizes against, and the cap of :func:`min_split_bytes`."""
+    return spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+
+
+def min_split_bytes(spark: SparkSession) -> int:
+    """The smallest split a file scan plans: Spark sizes a scan's splits
+    at min(:func:`split_bytes`, max(``spark.sql.files.openCostInBytes``,
+    bytes / cores)), so a plane of at most this many bytes is never cut
+    for its size, and by Spark's own cost model reading all of it costs
+    no more than opening one more file."""
+    conf = spark._jsparkSession.sessionState().conf()
+    return min(split_bytes(spark), conf.filesOpenCostInBytes())
 
 
 def data_bucket_count(spark: SparkSession, sf_dir: str) -> int:
     """The bucket count the inputs under ``sf_dir`` earn, one split
-    being the session's ``spark.sql.files.maxPartitionBytes``."""
+    being :func:`split_bytes`."""
     input_bytes = sum(
         os.path.getsize(os.path.join(d, f)) for d, _, fs in os.walk(sf_dir) for f in fs
     )
-    split_bytes = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
-    return bucket_count(input_bytes, split_bytes)
+    return bucket_count(input_bytes, split_bytes(spark))
 
 
 def bucketed_path(base: str, table: str, buckets: int) -> str:

@@ -3,11 +3,15 @@ with the underlying operator."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
 from hadoop_ozone_spark import model
 from hadoop_ozone_spark.endpoints import OzoneAnalytics
+from hadoop_ozone_spark.operators import listing, recon, s3
+from hadoop_ozone_spark.sources.snapshot import write_snapshot
 
 
 @pytest.fixture(scope="module")
@@ -118,3 +122,117 @@ def test_replication_planner_endpoints(api, spark, sf_dir):
     )
     kinds = {r["action"] for r in closes.select("action").distinct().collect()}
     assert kinds <= {"CLOSE", "FORCE_CLOSE", "DELETE_UNHEALTHY"}
+
+
+# --- serving small planes from one partition -------------------------------
+
+# A shuffle Exchange (hash, range, single or round-robin), not a broadcast.
+SHUFFLE = re.compile(r"(?<!Broadcast)Exchange ")
+
+
+def planned(df) -> str:
+    """The physical plan before execution: AQE's initial plan, which holds
+    every Exchange the planner put in."""
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+@pytest.fixture(scope="module")
+def planes(spark, sf_dir, tmp_path_factory):
+    """The key and container planes as the snapshot serves them: the key
+    plane partitioned by (volume, bucket), both read back from parquet."""
+    base = tmp_path_factory.mktemp("serving")
+    write_snapshot(model.om_keys(spark, sf_dir), str(base / "om_keys"))
+    model.containers(spark, sf_dir).write.parquet(str(base / "containers"))
+    return (spark.read.parquet(str(base / "om_keys")),
+            spark.read.parquet(str(base / "containers")))
+
+
+@pytest.fixture(scope="module")
+def served(spark, planes):
+    keys, containers = planes
+    return OzoneAnalytics(spark, keys, containers=containers)
+
+
+def _requests(keys):
+    """The seven api_serving request kinds: the facade call's arguments
+    and the operator call it answers, on the raw frames."""
+    row = keys.filter(F.col("volume") == "vol_r").orderBy("row_key").first()
+    vb = (F.col("volume") == "vol_r") & (F.col("bucket") == "bkt_o")
+    return {
+        "list_keys": (
+            dict(volume="vol_r", bucket="bkt_o", start_key="/vol_r/bkt_o/dir1/", max_keys=100),
+            lambda k, c: listing.list_keys(k, volume="vol_r", bucket="bkt_o",
+                                           start_key="/vol_r/bkt_o/dir1/", max_keys=100),
+        ),
+        "lookup_key": (
+            dict(row_key=row["row_key"]),
+            lambda k, c: listing.point_lookup(k, row["row_key"]),
+        ),
+        "list_status": (
+            dict(volume="vol_r", bucket="bkt_o", dir_path="dir1"),
+            lambda k, c: listing.list_status(k.filter(vb).select("key", "data_size"), "dir1"),
+        ),
+        "list_objects_v2": (
+            dict(volume="vol_r", bucket="bkt_o", prefix="dir1/", max_keys=100),
+            lambda k, c: s3.list_objects_v2(k.filter(vb), prefix="dir1/", max_keys=100),
+        ),
+        "namespace_summary": (
+            dict(volume="vol_r", bucket="bkt_o"),
+            lambda k, c: recon.namespace_du(k.filter(vb)),
+        ),
+        "containers_keys": (
+            dict(container_id=row["container_id"], max_keys=100),
+            lambda k, c: recon.keys_for_container(k, c, row["container_id"], 100),
+        ),
+        "utilization_file_count": (
+            dict(volume="vol_r", bucket="bkt_o"),
+            lambda k, c: recon.file_size_histogram(k).filter(vb),
+        ),
+    }
+
+
+KINDS = ["list_keys", "lookup_key", "list_status", "list_objects_v2",
+         "namespace_summary", "containers_keys", "utilization_file_count"]
+
+
+@pytest.mark.parametrize("kind", KINDS)
+def test_small_plane_request_plans_no_shuffle(served, planes, kind):
+    """A plane of at most the smallest split is served from one
+    partition: no request kind plans a shuffle, and each returns the
+    operator's rows over the raw frame, in the same order."""
+    args, operator = _requests(planes[0])[kind]
+    out = getattr(served, kind)(**args)
+    plan = planned(out)
+    assert not SHUFFLE.search(plan), plan
+    assert plan.count("BroadcastExchange") == (kind == "containers_keys"), plan
+    want = operator(*planes).collect()
+    assert want and out.collect() == want
+
+
+@pytest.mark.parametrize("conf", ["spark.sql.files.maxPartitionBytes",
+                                  "spark.sql.files.openCostInBytes"])
+def test_plane_above_the_smallest_split_keeps_its_plans(spark, planes, conf):
+    """With either bound of the smallest scan split set below the plane's
+    size, the facade leaves the frame as given (its scan keeps the tasks
+    Spark plans for it) and list_status keeps its exchanges."""
+    keys = planes[0]
+    size = keys._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    before = spark.conf.get(conf)
+    spark.conf.set(conf, str(size - 1))
+    try:
+        api = OzoneAnalytics(spark, keys)
+        assert api.keys is keys
+        plan = planned(api.list_status("vol_r", "bkt_o", "dir1"))
+        assert "Exchange hashpartitioning" in plan and "Exchange rangepartitioning" in plan
+    finally:
+        spark.conf.set(conf, before)
+    assert OzoneAnalytics(spark, keys).keys is not keys
+
+
+def test_unsized_and_streaming_frames_are_left_alone(spark, planes):
+    """A frame Spark cannot size (default estimate) and a streaming frame
+    are held as given."""
+    unsized = spark.sparkContext.parallelize([("/v/b/k",)]).toDF(["row_key"])
+    stream = spark.readStream.format("rate").load()
+    api = OzoneAnalytics(spark, unsized, events=stream)
+    assert api.keys is unsized and api.events is stream

@@ -129,6 +129,11 @@ def test_no_memo_env_disables_keep_result(spark, monkeypatch):
     r3 = scratch.keep_result("t_nomemo", spark.range(100), _b)
     r4 = scratch.keep_result("t_nomemo", spark.range(100), _b)
     assert len(calls) == 3 and r3 is r4  # memo back on
+    # only an explicit truthy value switches the memo off
+    for off in ("0", ""):
+        monkeypatch.setenv("SPARK_GRAFT_NO_MEMO", off)
+        assert scratch.keep_result("t_nomemo", spark.range(100), _b) is r3
+    assert len(calls) == 3
 
 
 def test_invalidate_drops_session_memos(spark):
