@@ -204,6 +204,15 @@ def _minhash_coefficients(
     return [(rng.randrange(1, p), rng.randrange(0, p)) for _ in range(num_hashes)]
 
 
+def _minhash_ab_sql(num_hashes: int) -> str:
+    """The (a_k, b_k) coefficients as one SQL array literal:
+    array<struct<a:int, b:int>> (every coefficient is below 2^31 − 1)."""
+    return "array(" + ", ".join(
+        f"named_struct('a', {a}, 'b', {b})"
+        for a, b in _minhash_coefficients(num_hashes)
+    ) + ")"
+
+
 def minhash_signatures(
     docs: DataFrame,
     text_col: str = "text",
@@ -249,13 +258,9 @@ def signatures_from_hashed(
         # constant-folded (a, b) struct array. nested transforms (loops
         # in codegen), never k unrolled expressions: the unrolled form
         # generated megabyte-scale methods that fell out of whole-stage
-        # codegen (3× slower)
-        ab = F.array(
-            *[
-                F.struct(F.lit(a).alias("a"), F.lit(b).alias("b"))
-                for a, b in _minhash_coefficients(num_hashes)
-            ]
-        )
+        # codegen (3× slower). The array is one SQL literal: built from
+        # Column calls it cost ~12 py4j round trips per element
+        ab = F.expr(_minhash_ab_sql(num_hashes))
         xs = F.transform(F.col("h0"), lambda h: F.pmod(h, F.lit(MINHASH_PRIME)))
         lanes_per_shingle = F.transform(
             xs,

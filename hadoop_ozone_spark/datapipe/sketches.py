@@ -35,19 +35,12 @@ REST_BITS = LANE_BITS - BUCKET_BITS  # 51
 ALPHA = 0.7213 / (1.0 + 1.079 / M)
 
 
-def _rho(rest: Column) -> Column:
+def _rho_sql(rest: str) -> str:
     """Leading zeros of the REST_BITS-bit value + 1: the smallest r ≥ 1
     with rest ≥ 2^(REST_BITS − r); all-zero rest → REST_BITS + 1.
-    Generated CASE ladder — integer compares only."""
-    expr = F.lit(REST_BITS + 1)
-    for r in range(REST_BITS, 0, -1):
-        expr = F.when(rest >= F.lit(2 ** (REST_BITS - r)), F.lit(r)).otherwise(
-            expr
-        )
-    return expr
-
-
-def _rho_sql(rest: str) -> str:
+    Generated CASE ladder — integer compares only. One SQL string for
+    both engines: Spark takes it through ``F.expr`` (one plan node
+    instead of a py4j round trip per branch)."""
     whens = "\n    ".join(
         f"WHEN {rest} >= {2 ** (REST_BITS - r)} THEN {r}"
         for r in range(1, REST_BITS + 1)
@@ -65,7 +58,7 @@ def hll_registers(df: DataFrame, col: str) -> DataFrame:
         F.expr(f"h DIV {M}").alias("rest"),
     )
     return staged.groupBy("bucket").agg(
-        F.max(_rho(F.col("rest"))).alias("register")
+        F.max(F.expr(_rho_sql("rest"))).alias("register")
     )
 
 
@@ -299,7 +292,7 @@ def hll_estimate_grouped(df: DataFrame, key: str, col: str) -> DataFrame:
         F.expr(f"h DIV {M}").alias("rest"),
     )
     regs = staged.groupBy("key", "bucket").agg(
-        F.max(_rho(F.col("rest"))).alias("register")
+        F.max(F.expr(_rho_sql("rest"))).alias("register")
     )
     scale = 2 ** (REST_BITS + 1)
     agg = regs.groupBy("key").agg(
@@ -418,28 +411,24 @@ def _qs_octaves() -> list[tuple[int, int, list[int]]]:
 _QS_OCTAVES = _qs_octaves()
 
 
-def _qs_bin(v: Column) -> Column:
-    """1-based index of the largest threshold <= v; 0 for v < 1.
+def _qs_bin(name: str) -> Column:
+    """1-based index of the largest threshold <= the value v of column
+    ``name``; 0 for v < 1.
 
     Two-level generated CASE ladder: a <=QS_MAX_OCTAVES+1-branch octave
     dispatch (powers of two), then the octave's own <=QS_PER_OCTAVE
     thresholds — identical result to the flat #{t <= v} law (pinned vs
     a bisect replay in tests) at <=29 evaluated compares instead of up
     to len(QS_THRESHOLDS): the flat ladder measured 36x a plain
-    groupBy's cost at 100M rows; this form ~6x less."""
-    expr = F.lit(0)  # v < 1
-    for lo, base, octs in _QS_OCTAVES:
-        inner = F.lit(base)  # floor; the octave's first threshold is lo <= v
-        for j, t in enumerate(octs, start=1):
-            inner = F.when(v >= F.lit(t), F.lit(base + j)).otherwise(inner)
-        expr = F.when(v >= F.lit(lo), inner).otherwise(expr)
-    return F.when(
-        v >= F.lit(2**QS_MAX_OCTAVES), F.lit(len(QS_THRESHOLDS))
-    ).otherwise(expr)
+    groupBy's cost at 100M rows; this form ~6x less. Emitted as the one
+    SQL string the DuckDB twin also uses: built as Column calls the
+    ladder cost ~5.7k py4j round trips per build."""
+    return F.expr(qs_bin_sql(f"`{name}`"))
 
 
 def qs_bin_sql(v: str) -> str:
-    """DuckDB twin of the two-level ladder (same constants)."""
+    """The two-level ladder over SQL expression ``v`` (Spark and DuckDB
+    share it)."""
     arms = []
     arms.append(f"WHEN {v} >= {2 ** QS_MAX_OCTAVES} THEN {len(QS_THRESHOLDS)}")
     for lo, base, octs in reversed(_QS_OCTAVES):
@@ -454,11 +443,20 @@ def qs_bin_sql(v: str) -> str:
     return f"CASE\n    {joined}\n    ELSE 0 END"
 
 
+# the threshold array as one SQL literal (one py4j call, not ~12 per
+# element); array<int> like the QS_THRESHOLDS ints
+_QS_BOUNDS_SQL = f"array({', '.join(map(str, QS_THRESHOLDS))})"
+
+
+def _q_ppms_sql(q_ppms: tuple[int, ...]) -> str:
+    return "array(" + ", ".join(f"CAST({q} AS BIGINT)" for q in q_ppms) + ")"
+
+
 def qsketch_counts(df: DataFrame, col: str) -> DataFrame:
     """(bin, cnt): the sketch itself. One map-side-combinable groupBy;
     <= len(QS_THRESHOLDS)+1 rows out regardless of input; SUM-merge."""
     return (
-        df.select(_qs_bin(F.col(col)).alias("bin"))
+        df.select(_qs_bin(col).alias("bin"))
         .groupBy("bin")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
@@ -480,14 +478,12 @@ def qsketch_quantiles(
     # even 3 rows through Python workers (one 32-task job per call) and
     # the crossJoin added a broadcast future per action — the explode
     # is pure codegen with identical row multiplicity
-    bounds = F.array(*[F.lit(t) for t in QS_THRESHOLDS])
+    bounds = F.expr(_QS_BOUNDS_SQL)
     picked = (
         cum.crossJoin(F.broadcast(n))
         .withColumn(
             "q_ppm",
-            F.explode(
-                F.array(*[F.lit(q).cast("long") for q in q_ppms])
-            ),
+            F.explode(F.expr(_q_ppms_sql(q_ppms))),
         )
         .withColumn("rank", F.expr("(q_ppm * n + 999999) DIV 1000000"))
         .filter(F.col("cum") >= F.col("rank"))
@@ -509,7 +505,7 @@ def qsketch_counts_grouped(df: DataFrame, key: str, col: str) -> DataFrame:
     shuffle (the hll_estimate_grouped shape); per-key artifacts
     SUM-merge independently."""
     return (
-        df.select(F.col(key).alias("key"), _qs_bin(F.col(col)).alias("bin"))
+        df.select(F.col(key).alias("key"), _qs_bin(col).alias("bin"))
         .groupBy("key", "bin")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
@@ -531,14 +527,12 @@ def qsketch_quantiles_grouped(
     cum = counts.withColumn("cum", F.sum("cnt").over(w))
     # inline literal explode, not a createDataFrame crossJoin — see
     # qsketch_quantiles
-    bounds = F.array(*[F.lit(t) for t in QS_THRESHOLDS])
+    bounds = F.expr(_QS_BOUNDS_SQL)
     picked = (
         cum.join(n, "key")
         .withColumn(
             "q_ppm",
-            F.explode(
-                F.array(*[F.lit(q).cast("long") for q in q_ppms])
-            ),
+            F.explode(F.expr(_q_ppms_sql(q_ppms))),
         )
         .withColumn("rank", F.expr("(q_ppm * n + 999999) DIV 1000000"))
         .filter(F.col("cum") >= F.col("rank"))

@@ -403,7 +403,6 @@ def placement_candidates(
     under: DataFrame,
     replicas: DataFrame,
     candidates: DataFrame,
-    prune_per_rack: bool = False,
 ) -> DataFrame:
     """Rack-aware target ranking — the relational closed form of
     SCMContainerPlacementRackAware.chooseDatanodes
@@ -436,40 +435,11 @@ def placement_candidates(
     dim; the holder/rack exclusions are joins against the fact-sized
     replica plane keyed on container_id — one shuffle each.
 
-    ``prune_per_rack`` (VERDICT r5 #2 — the disaster-mode fan-out
-    guard): pre-rank the candidate dim to the top-K nodes per rack
-    (free-space desc, id asc) BEFORE the per-container join, with
-    K = max(replication_factor) over ``under``. Provably
-    value-identical for every consumer that reads rank ≤ rf − cnt:
-    (a) the k-th globally-ranked row of a container always has
-    per-rack rank ≤ k (the global order sorts rack_rank ascending
-    within each covered-group), so consumed rows have post-exclusion
-    rack rank ≤ rf − cnt; (b) a container excludes at most cnt holder
-    nodes from any one rack, so the rack's top rf pre-exclusion nodes
-    contain its top rf − cnt post-exclusion nodes; (c) pruned rows
-    therefore never sit in any container's consumed top — removing
-    them cannot promote a different row into it. The fan-out shrinks
-    from |under| × |nodes| to |under| × |racks| × max_rf — under mass
-    failure (every container under-replicated) that is ~|nodes|/
-    (|racks|·rf) smaller, the difference between 10^10 and 10^7
-    intermediate rows at 10^6 containers × 10^4 nodes. The probe
-    surface (placement_probe) keeps the unpruned dim: it ranks ONE
-    container and displays beyond the consumed prefix.
+    This is the probe surface's (:func:`placement_probe`) full ranking:
+    it ranks ONE container and displays beyond the consumed prefix.
+    :func:`replication_actions` evaluates the same order per container
+    over a per-rack-cut candidate list instead.
     """
-    if prune_per_rack and "replication_factor" in under.columns:
-        kmax = under.agg(F.max("replication_factor").alias("_keep"))
-        candidates = (
-            candidates.withColumn(
-                "_rr",
-                F.row_number().over(
-                    Window.partitionBy("rack").orderBy(
-                        F.desc("free_bytes"), F.asc("datanode_id")
-                    )
-                ),
-            )
-            .crossJoin(F.broadcast(kmax))
-            .filter(F.col("_rr") <= F.col("_keep"))
-        )
     cand = F.broadcast(
         candidates.select("datanode_id", "rack", "free_bytes")
     )
@@ -569,10 +539,10 @@ def replication_actions(
 
     - Under-replicated (ReplicationManager.java:692-805): containers
       with 0 < replicas < factor get one ADD_REPLICA per missing
-      replica, targeted by :func:`placement_candidates` (rack-aware,
-      free-space ordered). Re-replication needs a healthy source
-      (:724-731 filters stale/dead sources; :790 warns and skips when
-      none) → NO_HEALTHY_SOURCE marker row instead of ADDs.
+      replica, targeted rack-aware and free-space ordered (the
+      :func:`placement_candidates` law). Re-replication needs a healthy
+      source (:724-731 filters stale/dead sources; :790 warns and skips
+      when none) → NO_HEALTHY_SOURCE marker row instead of ADDs.
     - Zero replicas: the reference cannot re-replicate from nothing —
       one MISSING marker row (the fsck surface picks it up).
     - Over-replicated (:807-860): delete excess replicas without
@@ -589,8 +559,29 @@ def replication_actions(
       blocked (the reference logs :897 and leaves it) — no row.
 
     Output: (container_id, action, datanode_id, rack, detail);
-    datanode_id/rack are NULL on marker rows. One fact-sized shuffle
-    per branch (the per-container windows); dims ride broadcasts.
+    datanode_id/rack are NULL on marker rows.
+
+    Plan: one pass per container, as the reference's run loop visits
+    each container once. The replica plane (⋈ the broadcast node dim)
+    is grouped by container once into a replica list, left-joined to
+    the non-DELETED containers, and crossed with ONE broadcast row:
+    the HEALTHY+IN_SERVICE candidate list plus the cluster's rack
+    count. Every action is a higher-order-function expression over the
+    container's own lists (:data:`_RM_ACTIONS_SQL`), exploded once. The
+    fact-sized shuffles are the replica grouping (none over the
+    container-bucketed snapshot table) and :func:`node_free_space`'s
+    per-node rollup behind the default candidates.
+
+    Disaster-mode fan-out guard (VERDICT r5 #2): each candidate carries
+    its rank within its rack (free space desc, id asc) over the full
+    candidate set, and the broadcast list keeps only ranks ≤ max(rf).
+    Exact: a container's post-exclusion rack rank is that pre-rank
+    minus the holders ahead of the node in its rack (at most cnt), and
+    the k-th ADD of a container has post-exclusion rack rank ≤ k ≤
+    rf − cnt (the target order sorts rack rank ascending within each
+    covered-group) — so a picked node always has pre-rank ≤ rf. The
+    per-container work is bounded by |racks| × max_rf candidates
+    instead of |nodes|.
 
     ``candidates`` (default: derived from ``replicas``/``containers_df``
     via :func:`node_free_space`, HEALTHY+IN_SERVICE filtered) lets the
@@ -601,163 +592,185 @@ def replication_actions(
     cluster-wide utilization (streaming/maintenance.py
     plan_actions_batch).
     """
-    scratch.fresh("replication_actions")
-    dn = datanodes_df.select(
-        "datanode_id", "rack", "node_state", "op_state"
-    )
-    # rep and scope anchor all four action branches (missing / no-source
-    # / add / delete); persist so the replica⋈dim join and the count
-    # rollup run once, not once per branch. Both are bounded by the
-    # replica plane / container dim, not the key fact table. Registered
-    # as scratch so the next invocation releases them (ADVICE r5).
-    rep = scratch.keep(
-        "replication_actions",
-        replicas.select("container_id", "datanode_id").join(
-            F.broadcast(dn), "datanode_id"
-        ),
-    )
-    counts = rep.groupBy("container_id").agg(
-        F.count(F.lit(1)).alias("replica_count"),
-        F.sum(F.when(F.col("node_state") == "HEALTHY", 1).otherwise(0)).alias(
-            "healthy_source_count"
-        ),
-    )
-    scope = (
-        containers_df.filter(F.col("state") != "DELETED")
-        .select("container_id", "replication_factor")
-        .join(counts, "container_id", "left")
-        .select(
-            "container_id",
-            "replication_factor",
-            F.coalesce(F.col("replica_count"), F.lit(0)).alias("replica_count"),
-            F.coalesce(F.col("healthy_source_count"), F.lit(0)).alias(
-                "healthy_source_count"
+    dn = datanodes_df.select("datanode_id", "rack", "node_state", "op_state")
+    per_container = (
+        replicas.select("container_id", "datanode_id")
+        .join(F.broadcast(dn), "datanode_id")
+        .groupBy("container_id")
+        .agg(
+            F.count(F.lit(1)).alias("cnt"),
+            F.sum(F.when(F.col("node_state") == "HEALTHY", 1).otherwise(0)).alias(
+                "healthy"
             ),
+            F.expr(
+                "collect_list(named_struct('id', datanode_id, 'rack', rack, "
+                "'in_service', op_state = 'IN_SERVICE'))"
+            ).alias("reps"),
         )
     )
-    scope = scratch.keep("replication_actions", scope)
-    rf, cnt = F.col("replication_factor"), F.col("replica_count")
-
-    missing = scope.filter(cnt == 0).select(
-        "container_id",
-        F.lit("MISSING").alias("action"),
-        F.lit(None).cast("long").alias("datanode_id"),
-        F.lit(None).cast("string").alias("rack"),
-        F.lit("no replicas found").alias("detail"),
+    scope = containers_df.filter(F.col("state") != "DELETED").select(
+        "container_id", F.col("replication_factor").alias("rf")
     )
-
-    under = scope.filter((cnt > 0) & (cnt < rf))
-    no_source = under.filter(F.col("healthy_source_count") == 0).select(
-        "container_id",
-        F.lit("NO_HEALTHY_SOURCE").alias("action"),
-        F.lit(None).cast("long").alias("datanode_id"),
-        F.lit(None).cast("string").alias("rack"),
-        F.lit("no healthy source replica").alias("detail"),
-    )
-    sourced = under.filter(F.col("healthy_source_count") > 0)
     if candidates is None:
         candidates = node_free_space(replicas, containers_df, datanodes_df).filter(
             (F.col("node_state") == "HEALTHY")
             & (F.col("op_state") == "IN_SERVICE")
         )
-    adds = (
-        placement_candidates(
-            sourced,
-            rep.select("container_id", "datanode_id", "rack"),
-            candidates,
-            prune_per_rack=True,
-        )
-        .join(
-            F.broadcast(
-                sourced.select("container_id", "replication_factor", "replica_count")
-            ),
-            "container_id",
-        )
-        .filter(F.col("rank") <= rf - cnt)
+    return (
+        scope.join(per_container, "container_id", "left")
         .select(
             "container_id",
-            F.lit("ADD_REPLICA").alias("action"),
-            F.col("datanode_id").cast("long").alias("datanode_id"),
-            "rack",
-            F.concat(
-                F.lit("add "), (rf - cnt).cast("string"),
-                F.lit(" replica(s): have "), cnt.cast("string"),
-                F.lit(" of "), rf.cast("string"),
-            ).alias("detail"),
+            "rf",
+            F.coalesce(F.col("cnt"), F.lit(0)).alias("cnt"),
+            F.coalesce(F.col("healthy"), F.lit(0)).alias("healthy"),
+            "reps",
         )
-    )
-
-    over = scope.filter(cnt > rf)
-    total_racks = dn.agg(F.countDistinct("rack").alias("total_racks"))
-    elig = (
-        rep.filter(F.col("op_state") == "IN_SERVICE")
-        .join(F.broadcast(over), "container_id")
-        .withColumn(
-            "rir",
-            F.row_number().over(
-                Window.partitionBy("container_id", "rack").orderBy("datanode_id")
-            ),
-        )
-    )
-    # per-container eligible-rack count as a window over the SAME frame
-    # (not a groupBy + re-join: a self-join here would re-enter elig's
-    # lineage and trip Spark's conflicting-reference analysis when the
-    # inputs are checkpointed RDDs — the streaming per-batch path)
-    is_dup = F.col("rir") > 1
-    ranked = (
-        elig.withColumn(
-            "elig_racks",
-            F.size(
-                F.collect_set("rack").over(Window.partitionBy("container_id"))
-            ).cast("long"),
-        )
-        .crossJoin(F.broadcast(total_racks))
-        .withColumn(
-            "drnk",
-            F.row_number().over(
-                Window.partitionBy("container_id").orderBy(
-                    F.when(is_dup, 0).otherwise(1),
-                    F.desc("rir"),
-                    F.desc("datanode_id"),
-                )
-            ),
-        )
-        .withColumn(
-            "single_rank",
-            F.row_number().over(
-                Window.partitionBy("container_id", is_dup).orderBy(
-                    F.desc("datanode_id")
-                )
-            ),
-        )
-    )
-    excess = cnt - rf
-    singles_quota = F.greatest(
-        F.lit(0), F.col("elig_racks") - F.least(rf, F.col("total_racks"))
-    )
-    deletes = ranked.filter(
-        (F.col("drnk") <= excess)
-        & (is_dup | (F.col("single_rank") <= singles_quota))
-    ).select(
-        "container_id",
-        F.lit("DELETE_REPLICA").alias("action"),
-        F.col("datanode_id").cast("long").alias("datanode_id"),
-        "rack",
-        F.concat(
-            F.lit("delete "), excess.cast("string"),
-            F.lit(" excess replica(s): have "), cnt.cast("string"),
-            F.lit(" of "), rf.cast("string"),
-        ).alias("detail"),
-    )
-
-    return (
-        missing.unionByName(no_source)
-        .unionByName(adds)
-        .unionByName(deletes)
+        .crossJoin(F.broadcast(_rm_targets(candidates, scope, dn)))
+        .select("*", F.expr(_RM_ELIG_SQL).alias("elig"))
+        .select("container_id", F.explode(F.expr(_RM_ACTIONS_SQL)).alias("a"))
+        .select("container_id", "a.*")
         .orderBy(
             "container_id", "action", F.coalesce(F.col("datanode_id"), F.lit(-1))
         )
     )
+
+
+def _rm_targets(
+    candidates: DataFrame, scope: DataFrame, dn: DataFrame
+) -> DataFrame:
+    """replication_actions' one broadcast row: ``cands``, the candidate
+    nodes as [{id, rack, free, pre}] with ``pre`` the node's rank in its
+    rack (free space desc, id asc) cut at max(rf) over ``scope`` (the
+    fan-out guard), and ``total_racks``, the rack count of ``dn``.
+
+    The three facts come out of ONE global aggregate over the union of
+    their inputs, so the row costs one shuffle and one broadcast. The
+    node dim is small by nature: held in one partition, its rack window
+    plans no exchange."""
+    ranked = (
+        candidates.select("datanode_id", "rack", "free_bytes")
+        .coalesce(1)
+        .select(
+            F.struct(
+                F.col("datanode_id").alias("id"),
+                "rack",
+                F.col("free_bytes").alias("free"),
+                F.row_number()
+                .over(
+                    Window.partitionBy("rack").orderBy(
+                        F.desc("free_bytes"), F.asc("datanode_id")
+                    )
+                )
+                .alias("pre"),
+            ).alias("cand")
+        )
+    )
+    return (
+        ranked.unionByName(scope.select("rf"), allowMissingColumns=True)
+        .unionByName(
+            dn.select(F.col("rack").alias("dn_rack")), allowMissingColumns=True
+        )
+        .agg(
+            F.collect_list("cand").alias("cands"),
+            F.max("rf").alias("max_rf"),
+            F.expr("size(collect_set(dn_rack))").alias("total_racks"),
+        )
+        .select(
+            F.expr("filter(cands, c -> c.pre <= max_rf)").alias("cands"),
+            "total_racks",
+        )
+    )
+
+
+def _rm_row(action: str, node: str, rack: str, detail: str) -> str:
+    return (
+        f"named_struct('action', '{action}', 'datanode_id', {node}, "
+        f"'rack', {rack}, 'detail', {detail})"
+    )
+
+
+def _rm_marker(action: str, detail: str) -> str:
+    row = _rm_row(
+        action, "CAST(NULL AS BIGINT)", "CAST(NULL AS STRING)", f"'{detail}'"
+    )
+    return f"array({row})"
+
+
+# One container's action list over its columns (rf, cnt, healthy,
+# reps: [{id, rack, in_service}], cands: [{id, rack, free, pre}],
+# total_racks). Nulls follow the joins and windows of the DuckDB twin
+# (scm_queries RM1_SQL): a NULL rack never covers (join `=`), but NULL
+# racks share one rack-rank group (`<=>`, as a window partition) and
+# are not counted as an eligible rack (count DISTINCT).
+#
+# ADD: drop holders, rank (rack covered, post-exclusion rack rank,
+# free desc nulls last, id), take rf − cnt. Candidates with pre-rank
+# > rf can never be picked (see replication_actions), so they are cut
+# before the per-candidate work.
+_RM_ADD_SQL = """transform(
+  slice(
+    array_sort(transform(
+      filter(cands, c -> c.pre <= rf
+                      AND NOT coalesce(exists(reps, r -> r.id = c.id), false)),
+      c -> named_struct(
+        'covered', coalesce(exists(reps, r -> r.rack = c.rack), false),
+        'post', c.pre - size(filter(cands, h -> h.rack <=> c.rack
+                                   AND h.pre < c.pre
+                                   AND exists(reps, r -> r.id = h.id))),
+        'free_null', c.free IS NULL,
+        'neg_free', -c.free,
+        'id', c.id,
+        'rack', c.rack))),
+    1, CAST(rf - cnt AS INT)),
+  c -> """ + _rm_row(
+    "ADD_REPLICA",
+    "CAST(c.id AS BIGINT)",
+    "c.rack",
+    "concat('add ', CAST(rf - cnt AS STRING), ' replica(s): have ', "
+    "CAST(cnt AS STRING), ' of ', CAST(rf AS STRING))",
+) + ")"
+
+# DELETE, part 1 (over-replicated containers only): the IN_SERVICE
+# replicas, each with the count of IN_SERVICE replicas ahead of it in
+# its rack by id (rir − 1; a duplicated replica row ranks by its list
+# position), sorted rack-duplicates first by (rir desc, id desc), then
+# rack singles by id desc.
+_RM_ELIG_SQL = """CASE WHEN cnt > rf THEN array_sort(transform(
+  filter(
+    transform(reps, (x, i) -> named_struct(
+      'in_service', x.in_service, 'id', x.id, 'rack', x.rack,
+      'ahead', size(filter(reps, (y, j) -> y.in_service AND y.rack <=> x.rack
+                           AND (y.id < x.id OR (y.id = x.id AND j < i)))))),
+    x -> x.in_service),
+  x -> named_struct('single', x.ahead = 0, 'neg_ahead', -x.ahead,
+                    'neg_id', -x.id, 'id', x.id, 'rack', x.rack)))
+END"""
+
+# DELETE, part 2: the first cnt − rf of that order, rack singles only
+# within the quota max(0, eligible racks − min(rf, total_racks)).
+_RM_DELETE_SQL = """transform(
+  concat(
+    slice(filter(elig, x -> NOT x.single), 1, CAST(cnt - rf AS INT)),
+    slice(filter(elig, x -> x.single), 1, CAST(greatest(0, least(
+      size(array_distinct(filter(transform(elig, x -> x.rack),
+                                 r -> r IS NOT NULL)))
+        - least(rf, total_racks),
+      cnt - rf - size(filter(elig, x -> NOT x.single)))) AS INT))),
+  x -> """ + _rm_row(
+    "DELETE_REPLICA",
+    "CAST(x.id AS BIGINT)",
+    "x.rack",
+    "concat('delete ', CAST(cnt - rf AS STRING), ' excess replica(s): have ', "
+    "CAST(cnt AS STRING), ' of ', CAST(rf AS STRING))",
+) + """)"""
+
+_RM_ACTIONS_SQL = f"""CASE
+  WHEN cnt = 0 THEN {_rm_marker('MISSING', 'no replicas found')}
+  WHEN cnt < rf AND healthy = 0
+    THEN {_rm_marker('NO_HEALTHY_SOURCE', 'no healthy source replica')}
+  WHEN cnt < rf THEN {_RM_ADD_SQL}
+  WHEN cnt > rf THEN {_RM_DELETE_SQL}
+END"""
 
 
 def safe_mode_status(

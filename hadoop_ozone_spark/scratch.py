@@ -1,7 +1,7 @@
 """Bounded scratch-cache registry for per-query persisted intermediates.
 
 Several operators persist a bounded intermediate frame that multiple
-branches of ONE query tree consume (e.g. replication_actions' replica⋈dim
+branches of ONE query tree consume (e.g. close_actions' replica⋈container
 anchor). The persist must outlive the function return — the caller
 materializes the lazy result — so an in-function unpersist is impossible,
 but never unpersisting accumulates cached blocks across repeated

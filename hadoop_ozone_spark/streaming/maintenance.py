@@ -166,16 +166,16 @@ def run_foreachbatch_merge(
             return
         if prev is not None and batch_id <= prev["last_batch_id"]:
             return  # replayed batch — idempotent no-op
-        merged = [
-            (
-                (prev["net_count"] if prev else 0) + new["net_count"],
-                (prev["net_bytes"] if prev else 0) + new["net_bytes"],
-                max(prev["last_seqno"] if prev else 0, new["max_seqno"]),
-                batch_id,
-            )
-        ]
-        spark.createDataFrame(
-            merged, "net_count long, net_bytes long, last_seqno long, last_batch_id long"
+        merged = {
+            "net_count": (prev["net_count"] if prev else 0) + new["net_count"],
+            "net_bytes": (prev["net_bytes"] if prev else 0) + new["net_bytes"],
+            "last_seqno": max(prev["last_seqno"] if prev else 0, new["max_seqno"]),
+            "last_batch_id": batch_id,
+        }
+        # the one row as JVM literals: createDataFrame over a Python list
+        # ships it through a PythonRDD, which forks a Python worker
+        spark.range(1, numPartitions=1).select(
+            *[F.lit(v).cast("long").alias(k) for k, v in merged.items()]
         ).write.mode("overwrite").parquet(f"{mart_dir}/batch-{batch_id}")
         # prune superseded versions AFTER the new one is complete
         jvm = spark._jvm

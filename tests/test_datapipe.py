@@ -2252,11 +2252,106 @@ def test_qsketch_two_level_ladder_matches_bisect(spark):
     got = {
         r.v: r.bin
         for r in df.select(
-            "v", sketches._qs_bin(F.col("v")).alias("bin")
+            "v", sketches._qs_bin("v").alias("bin")
         ).collect()
     }
     for v in sorted(vals):
         assert got[v] == bisect.bisect_right(sketches.QS_THRESHOLDS, v), v
+
+
+# The Column-call forms the SQL-string ladders and literal arrays
+# replaced (kept here only as the reference the rewrites are pinned to).
+
+def _qs_bin_columns(v):
+    from hadoop_ozone_spark.datapipe import sketches
+
+    expr = F.lit(0)
+    for lo, base, octs in sketches._QS_OCTAVES:
+        inner = F.lit(base)
+        for j, t in enumerate(octs, start=1):
+            inner = F.when(v >= F.lit(t), F.lit(base + j)).otherwise(inner)
+        expr = F.when(v >= F.lit(lo), inner).otherwise(expr)
+    return F.when(
+        v >= F.lit(2**sketches.QS_MAX_OCTAVES), F.lit(len(sketches.QS_THRESHOLDS))
+    ).otherwise(expr)
+
+
+def _rho_columns(rest):
+    from hadoop_ozone_spark.datapipe import sketches
+
+    expr = F.lit(sketches.REST_BITS + 1)
+    for r in range(sketches.REST_BITS, 0, -1):
+        expr = F.when(
+            rest >= F.lit(2 ** (sketches.REST_BITS - r)), F.lit(r)
+        ).otherwise(expr)
+    return expr
+
+
+def _same_column(df, new, old):
+    """``new`` and ``old`` agree on every row of ``df`` and in type."""
+    out = df.select(new.alias("new"), old.alias("old"))
+    assert out.schema["new"].dataType == out.schema["old"].dataType
+    rows = out.collect()
+    assert rows and all(r.new == r.old for r in rows), [
+        r for r in rows if r.new != r.old
+    ][:5]
+
+
+def test_qs_bin_sql_matches_column_ladder(spark):
+    # every threshold and octave bound ±1, 0, the overflow edge, null
+    from hadoop_ozone_spark.datapipe import sketches
+
+    vals = {0, 2**sketches.QS_MAX_OCTAVES}
+    for t in sketches.QS_THRESHOLDS + [lo for lo, _, _ in sketches._QS_OCTAVES]:
+        vals |= {t - 1, t, t + 1}
+    df = spark.createDataFrame(
+        [(v,) for v in sorted(vals)] + [(None,)], "v long"
+    )
+    _same_column(df, sketches._qs_bin("v"), _qs_bin_columns(F.col("v")))
+
+
+def test_rho_sql_matches_column_ladder(spark):
+    # every 2^k bound ±1 over the REST_BITS range, 0, all-ones, null
+    from hadoop_ozone_spark.datapipe import sketches
+
+    vals = {0, 2**sketches.REST_BITS - 1}
+    for k in range(sketches.REST_BITS):
+        vals |= {2**k - 1, 2**k, 2**k + 1}
+    df = spark.createDataFrame(
+        [(v,) for v in sorted(vals)] + [(None,)], "rest long"
+    )
+    _same_column(
+        df, F.expr(sketches._rho_sql("rest")), _rho_columns(F.col("rest"))
+    )
+
+
+def test_literal_arrays_match_column_form(spark):
+    # the qsketch bounds / q_ppm axis and the portable MinHash (a, b)
+    # coefficients: same values, same array and struct field types
+    from hadoop_ozone_spark.datapipe import sketches
+
+    one = spark.range(1)
+    _same_column(
+        one,
+        F.expr(sketches._QS_BOUNDS_SQL),
+        F.array(*[F.lit(t) for t in sketches.QS_THRESHOLDS]),
+    )
+    q_ppms = (500000, 900000, 990000)
+    _same_column(
+        one,
+        F.expr(sketches._q_ppms_sql(q_ppms)),
+        F.array(*[F.lit(q).cast("long") for q in q_ppms]),
+    )
+    _same_column(
+        one,
+        F.expr(dedup._minhash_ab_sql(dedup.NUM_HASHES)),
+        F.array(
+            *[
+                F.struct(F.lit(a).alias("a"), F.lit(b).alias("b"))
+                for a, b in dedup._minhash_coefficients(dedup.NUM_HASHES)
+            ]
+        ),
+    )
 
 
 def test_cm_grouped_equals_per_key_ungrouped(spark):

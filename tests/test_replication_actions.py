@@ -5,6 +5,8 @@ the rack-aware chooser (SCMContainerPlacementRackAware)."""
 
 from __future__ import annotations
 
+from pyspark.sql import functions as F
+
 from hadoop_ozone_spark.operators import scm
 
 
@@ -506,3 +508,241 @@ def test_add_law_invariants_random_sweep(spark):
         uncovered_with_cands = {rk for rk in cands.values() if rk not in covered}
         new_racks = {cands[d] for d in got} - covered
         assert len(new_racks) == min(len(got), len(uncovered_with_cands))  # (c)
+
+
+# --- edge cases of the one-pass planner, each pinned twice: to the rows
+# the join/window planner produced and to the DuckDB twin (RM1_SQL's CTE
+# stack run over the same synthetic tables) ---------------------------
+
+def _twin(containers, replicas, datanodes):
+    import duckdb
+
+    from hadoop_ozone_spark import model
+    from hadoop_ozone_spark.plans import scm_queries as sq
+
+    con = duckdb.connect()
+    for name, cols, rows in (
+        (
+            "datanodes",
+            "datanode_id BIGINT, hostname VARCHAR, rack VARCHAR, "
+            "node_state VARCHAR, op_state VARCHAR, capacity_bytes BIGINT",
+            datanodes,
+        ),
+        (
+            "containers",
+            "container_id BIGINT, state VARCHAR, replication_factor INTEGER, "
+            "used_bytes BIGINT, pipeline_id BIGINT",
+            containers,
+        ),
+        ("rm_replicas", "container_id BIGINT, datanode_id BIGINT", replicas),
+    ):
+        con.execute(f"CREATE TABLE {name} ({cols})")
+        if rows:
+            marks = ", ".join("?" * len(rows[0]))
+            con.executemany(f"INSERT INTO {name} VALUES ({marks})", rows)
+    sql = model.with_ctes(*sq._RM_STACK, *sq._RM_DELETE_STACK, body=sq._RM1_BODY)
+    return [tuple(r) for r in con.execute(sql).fetchall()]
+
+
+def _pinned(spark, containers, replicas, datanodes, expected):
+    got = [tuple(r) for r in _actions(spark, containers, replicas, datanodes)]
+    assert got == expected
+    assert got == _twin(containers, replicas, datanodes)
+
+
+def _add(cid, node, rack, need, have, rf):
+    return (cid, "ADD_REPLICA", node, rack,
+            f"add {need} replica(s): have {have} of {rf}")
+
+
+def _delete(cid, node, rack, excess, have, rf):
+    return (cid, "DELETE_REPLICA", node, rack,
+            f"delete {excess} excess replica(s): have {have} of {rf}")
+
+
+def _dn(d, rack, capacity=100, node_state="HEALTHY", op_state="IN_SERVICE"):
+    return (d, f"n{d}", rack, node_state, op_state, capacity)
+
+
+def _closed(cid, rf):
+    return (cid, "CLOSED", rf, 0, 0)  # used 0: free space = capacity
+
+
+def test_null_rack_on_replica_and_candidate(spark):
+    # A NULL rack never covers (join `=`), yet NULL-rack nodes share one
+    # rack-rank group (window partition) and are no eligible rack
+    # (collect_set). Container 10 (holder: node 2, NULL rack): node 3 is
+    # not covered, and ranks 1 in the NULL group once holder 2 is out,
+    # so it ties with the r0/r1 heads and wins on free space over 4.
+    # Container 20: node 3 is the NULL group's duplicate; the only
+    # eligible rack is r0, so with rf 1 no singleton may go.
+    dns = [
+        _dn(1, "r0", 100), _dn(2, None, 100), _dn(3, None, 90),
+        _dn(4, "r1", 80), _dn(5, "r0", 70),
+    ]
+    _pinned(
+        spark,
+        [_closed(10, 3), _closed(20, 1)],
+        [(10, 2), (20, 1), (20, 2), (20, 3)],
+        dns,
+        [
+            _add(10, 1, "r0", 2, 1, 3),
+            _add(10, 3, None, 2, 1, 3),
+            _delete(20, 3, None, 2, 3, 1),
+        ],
+    )
+
+
+def test_duplicate_replica_rows(spark):
+    # a (container, datanode) pair reported twice counts twice (count),
+    # and its second row is a rack duplicate (row_number): 10 is exactly
+    # replicated, 20 deletes the duplicate, 30 has 2 of 4
+    _pinned(
+        spark,
+        [_closed(10, 3), _closed(20, 2), _closed(30, 4)],
+        [
+            (10, 1), (10, 1), (10, 3),
+            (20, 1), (20, 1), (20, 3),
+            (30, 5), (30, 5),
+        ],
+        DN_3RACKS,
+        [
+            _delete(20, 1, "r0", 1, 3, 2),
+            _add(30, 1, "r0", 2, 2, 4),
+            _add(30, 3, "r1", 2, 2, 4),
+        ],
+    )
+
+
+def test_equal_free_space_within_and_across_racks(spark):
+    # all free space equal: rack rank then id decide, and a covered
+    # rack's node ranks by its post-exclusion rank (node 6 behind
+    # holder 5 is rank 1 of r2 for container 30)
+    dns = [_dn(d, f"r{(d - 1) // 2}") for d in range(1, 7)]
+    _pinned(
+        spark,
+        [_closed(10, 3), _closed(20, 3), _closed(30, 5)],
+        [(10, 1), (20, 2), (20, 4), (30, 5)],
+        dns,
+        [
+            _add(10, 3, "r1", 2, 1, 3),
+            _add(10, 5, "r2", 2, 1, 3),
+            _add(20, 5, "r2", 1, 2, 3),
+            _add(30, 1, "r0", 4, 1, 5),
+            _add(30, 2, "r0", 4, 1, 5),
+            _add(30, 3, "r1", 4, 1, 5),
+            _add(30, 4, "r1", 4, 1, 5),
+        ],
+    )
+
+
+def test_replication_factor_above_rack_count(spark):
+    # rf 5 on 3 racks: the uncovered rack's second node (5) still ranks
+    # before any covered rack's node; rf 4 over-replicated: expected
+    # coverage is min(4, 3) = 3, so only rack duplicates go
+    _pinned(
+        spark,
+        [_closed(10, 5), _closed(20, 4)],
+        [(10, 1), (10, 3)] + [(20, d) for d in range(1, 7)],
+        DN_3RACKS,
+        [
+            _add(10, 2, "r0", 3, 2, 5),
+            _add(10, 5, "r2", 3, 2, 5),
+            _add(10, 6, "r2", 3, 2, 5),
+            _delete(20, 4, "r1", 2, 6, 4),
+            _delete(20, 6, "r2", 2, 6, 4),
+        ],
+    )
+
+
+def test_over_replicated_surplus_not_in_service(spark):
+    # 10: the surplus sits on DECOMMISSIONING/IN_MAINTENANCE nodes and
+    # the 3 IN_SERVICE singletons are all needed → no row; 20 (rf 2)
+    # may drop one singleton; 30: a NULL op_state is not IN_SERVICE
+    dns = [
+        _dn(1, "r0"), _dn(2, "r1"), _dn(3, "r2"),
+        _dn(4, "r0", op_state="DECOMMISSIONING"),
+        _dn(5, "r1", op_state="IN_MAINTENANCE"),
+        _dn(6, "r2", op_state=None),
+    ]
+    _pinned(
+        spark,
+        [_closed(10, 3), _closed(20, 2), _closed(30, 1)],
+        [(10, d) for d in range(1, 6)]
+        + [(20, d) for d in range(1, 6)]
+        + [(30, 6), (30, 1)],
+        dns,
+        [_delete(20, 3, "r2", 3, 5, 2)],
+    )
+
+
+def test_holder_exclusion_empties_candidates(spark):
+    # 10: both HEALTHY+IN_SERVICE nodes already hold it → no ADD row at
+    # all (not a marker); 20 gets the one candidate left
+    dns = [
+        _dn(1, "r0"), _dn(2, "r1"), _dn(3, "r2", node_state="STALE"),
+    ]
+    _pinned(
+        spark,
+        [_closed(10, 4), _closed(20, 3)],
+        [(10, 1), (10, 2), (10, 3), (20, 1)],
+        dns,
+        [_add(20, 2, "r1", 2, 1, 3)],
+    )
+
+
+# 3 racks × 6 nodes; free space falls with the id, so each rack's head
+# is its lowest id (r0: 1-6, r1: 7-12, r2: 13-18)
+DN_WIDE = [_dn(d, f"r{(d - 1) // 6}", 1000 - d) for d in range(1, 19)]
+
+
+def test_candidate_row_cut_at_max_rf_per_rack(spark):
+    # more nodes per rack than max(rf): the broadcast candidate list
+    # holds each rack's top max(rf) = 3 nodes, no more
+    row = scm._rm_targets(
+        _datanodes(spark, DN_WIDE).withColumn("free_bytes", F.col("capacity_bytes")),
+        spark.createDataFrame([(2,), (3,), (1,)], "rf int"),
+        _datanodes(spark, DN_WIDE),
+    ).collect()
+    assert len(row) == 1
+    assert row[0].total_racks == 3
+    assert sorted((c.rack, c.pre, c.id) for c in row[0].cands) == [
+        (f"r{r}", k, 6 * r + k) for r in range(3) for k in (1, 2, 3)
+    ]
+
+
+def test_cut_candidates_match_unpruned_twin(spark):
+    # the cut is exact: hand-checked containers, then 80 seeded ones
+    # with holders drawn from the rack heads (where the post-exclusion
+    # rank differs most from the pre-rank), against the twin's
+    # unpruned ranking
+    import random
+
+    _pinned(
+        spark,
+        [_closed(c, 3) for c in (10, 20, 30, 50, 60)] + [_closed(40, 2)],
+        [(10, 1), (10, 2), (20, 1), (20, 7), (30, 8), (30, 9), (60, 1), (60, 8)]
+        + [(50, d) for d in (1, 2, 3, 7, 13)],
+        DN_WIDE,
+        [
+            _add(10, 7, "r1", 1, 2, 3),
+            _add(20, 13, "r2", 1, 2, 3),
+            _add(30, 1, "r0", 1, 2, 3),
+            (40, "MISSING", None, None, "no replicas found"),
+            _delete(50, 2, "r0", 2, 5, 3),
+            _delete(50, 3, "r0", 2, 5, 3),
+            _add(60, 13, "r2", 1, 2, 3),
+        ],
+    )
+    rng = random.Random(11)
+    heads = [d for d in range(1, 19) if (d - 1) % 6 < 4]
+    containers, replicas = [], []
+    for cid in range(1, 81):
+        rf = rng.choice([2, 3, 3])
+        containers.append(_closed(cid, rf))
+        replicas.extend((cid, d) for d in rng.sample(heads, rng.randint(0, 5)))
+    got = [
+        tuple(r) for r in _actions(spark, containers, replicas, DN_WIDE)
+    ]
+    assert got == _twin(containers, replicas, DN_WIDE)
+    assert {a for _, a, *_ in got} >= {"ADD_REPLICA", "DELETE_REPLICA"}

@@ -3,6 +3,7 @@
 
 from __future__ import annotations
 
+import os
 import shutil
 import tempfile
 
@@ -68,6 +69,53 @@ def test_foreachbatch_merge_process_equals_reprocess(spark, events_df):
         # 500 + 2000 + (1500−500) − 2000 + 4096
         assert mart["net_bytes"] == batch["net_bytes"] == 500 + 2000 + 1000 - 2000 + 4096
         assert mart["last_seqno"] == 5
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def test_foreachbatch_merge_mart_schema_and_replay(spark, events_df):
+    """Two micro-batches, then the second one replayed with the same
+    batch id (its commit dropped from the checkpoint, as after a crash
+    between the sink write and the commit): the mart holds one long row
+    per version, each version in its own ``batch-<id>`` directory, and
+    the replay leaves it untouched."""
+    tmp = tempfile.mkdtemp(prefix="ozspark_stream_")
+    events_dir, mart_dir, ckpt = f"{tmp}/events", f"{tmp}/mart", f"{tmp}/ckpt"
+    rows = events_df.collect()
+
+    def run():
+        stream = maintenance.read_event_stream(spark, events_dir, 10)
+        maintenance.run_foreachbatch_merge(stream, mart_dir, ckpt).awaitTermination(120)
+        return maintenance.read_mart(spark, mart_dir)
+
+    def append(part):
+        spark.createDataFrame(part, schema=maintenance.EVENT_SCHEMA).coalesce(
+            1
+        ).write.mode("append").parquet(events_dir)
+
+    try:
+        append(rows[:2])  # batch 0: PUT k1 500, PUT k2 2000
+        first = run()
+        assert [(f.name, f.dataType.simpleString()) for f in first.schema] == [
+            ("net_count", "bigint"),
+            ("net_bytes", "bigint"),
+            ("last_seqno", "bigint"),
+            ("last_batch_id", "bigint"),
+        ]
+        assert [tuple(r) for r in first.collect()] == [(2, 2500, 2, 0)]
+
+        append(rows[2:])  # batch 1: UPDATE k1 +1000, DELETE k2, PUT k3 4096
+        second = [tuple(r) for r in run().collect()]
+        assert second == [(2, 2500 + 1000 - 2000 + 4096, 5, 1)]
+        assert sorted(os.listdir(mart_dir)) == ["batch-1"]
+
+        # replay batch 1: same id, same rows → the mart must not move
+        for f in ("1", ".1.crc"):  # the commit and its Hadoop checksum
+            os.remove(f"{ckpt}/commits/{f}")
+        replayed = run()
+        assert [tuple(r) for r in replayed.collect()] == second
+        assert sorted(os.listdir(mart_dir)) == ["batch-1"]
+        assert os.path.exists(f"{ckpt}/commits/1")  # the replay ran
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 

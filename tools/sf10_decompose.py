@@ -138,8 +138,8 @@ def _materialize_cand(con, tmp: str, prune_per_rack: bool = False) -> str:
     the only CTE in the RM stack that must NOT be container-sliced.
 
     ``prune_per_rack`` applies the Spark operator's own
-    value-identical candidate prune (operators/scm.py
-    placement_candidates, VERDICT r5 #2 proof): keep each rack's top
+    value-identical candidate cut (operators/scm.py
+    replication_actions, VERDICT r5 #2 proof): keep each rack's top
     max(replication_factor) nodes by (free_bytes DESC, datanode_id) —
     every row any container consumes at rank <= rf - cnt survives the
     prune, so the replay result is bit-identical while add_pairs
