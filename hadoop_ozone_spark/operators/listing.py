@@ -334,21 +334,6 @@ def resolve_bucket_links(buckets: DataFrame, max_depth: int = 16) -> DataFrame:
     NULL sources for non-link buckets.
     """
     assert max_depth & (max_depth - 1) == 0, "max_depth must be a power of 2"
-    # the whole resolution is memoized on the INPUT plan (keep_result,
-    # optimization r13): the loop's per-round checkpoints give the
-    # output a plan with fresh RDD ids every run, so no output-side
-    # plan test can hit — without this, every steady-state call
-    # re-ran log2(max_depth) rounds (one isEmpty action + broadcast
-    # each; measured 15 jobs per repeat call at sf0.1)
-    return scratch.keep_result(
-        "resolve_bucket_links",
-        buckets,
-        lambda: _resolve_bucket_links_build(buckets, max_depth),
-        params=("max_depth", max_depth),
-    )
-
-
-def _resolve_bucket_links_build(buckets: DataFrame, max_depth: int) -> DataFrame:
     scratch.fresh("resolve_bucket_links")
     link_set = scratch.keep(
         "resolve_bucket_links",

@@ -236,19 +236,10 @@ def dp_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     propagation, datapipe/dedup.py dedup_clusters) over the verified
     minhash pair graph — the transitive keep-one-per-cluster delete
     list, which pair output alone cannot produce (A~B, B~C must group
-    A, C). Oracle replays the fixpoint with a recursive CTE.
-
-    Memoized on the corpus plan (keep_result, optimization r13 guide
-    §5): the CC loop's result is already input-memoized inside
-    dedup_clusters; this wrapper also skips rebuilding the minhash
-    banding plan (~1.2s of steady driver build measured at sf0.1)."""
+    A, C). Oracle replays the fixpoint with a recursive CTE."""
     corpus = model.dedup_corpus(spark, sf_dir)
-    return scratch.keep_result(
-        "q:dp_dedup_clusters",
-        corpus,
-        lambda: dedup.dedup_clusters(
-            dedup.minhash_dedup_pairs(corpus, threshold=0.5, portable=True)
-        ),
+    return dedup.dedup_clusters(
+        dedup.minhash_dedup_pairs(corpus, threshold=0.5, portable=True)
     )
 
 
@@ -583,17 +574,10 @@ LIMIT 10
 def dp_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-flat probe: nearest-centroid inverted lists (deterministic
     seed codebook — oracle-replayable; a trained codebook drops in via
-    the centroids argument), query probes the 4 best of 16 lists.
-
-    Plan-memoized on the embeddings frame (keep_result, optimization
-    r13 guide §5; steady build ~0.6s measured)."""
+    the centroids argument), query probes the 4 best of 16 lists."""
     emb = model.load(spark, sf_dir, "embeddings")
-    return scratch.keep_result(
-        "q:dp_ann_ivf_topk",
-        emb,
-        lambda: similarity.ivf_topk(
-            emb, _query_vec(spark, sf_dir), k=10, n_lists=16, nprobe=4
-        ),
+    return similarity.ivf_topk(
+        emb, _query_vec(spark, sf_dir), k=10, n_lists=16, nprobe=4
     )
 
 
@@ -1371,18 +1355,9 @@ def dp_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment, pairwise cosine WITHIN clusters only, min-id keeper —
     datapipe/similarity.py semantic_dedup_pairs. Runs on the corpus
     with injected scaled copies (cosine exactly 1.0) so the detector
-    has verifiable positives.
-
-    Memoized on the corpus plan (keep_result, optimization r13 guide
-    §5): steady re-invocation measured 3.5s wall against 1.0s of
-    stage time — the gap is py4j plan reconstruction plus the
-    registry's same-plan analyses of the assignment tree."""
+    has verifiable positives."""
     emb = model.embedding_corpus(spark, sf_dir)
-    return scratch.keep_result(
-        "q:dp_semantic_dedup",
-        emb,
-        lambda: similarity.semantic_dedup_pairs(emb, n_lists=16, threshold=0.9),
-    )
+    return similarity.semantic_dedup_pairs(emb, n_lists=16, threshold=0.9)
 
 
 DP_SEMANTIC_DEDUP_SQL = model.with_ctes(
@@ -1612,18 +1587,6 @@ ORACLES["dp_ann_pq_topk"] = DP_PQ_SQL
 # --- IVF-PQ (IVFADC) ANN (round 7) -----------------------------------------
 
 def dp_ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Memoizing wrapper (keep_result, optimization r13 guide §5):
-    steady re-invocation measured ~1.7s driver plan build vs ~0.6s
-    execute; deterministic function of the embedding corpus frame."""
-    emb = model.embedding_corpus(spark, sf_dir)
-    return scratch.keep_result(
-        "q:dp_ann_ivfpq_topk",
-        emb,
-        lambda: _dp_ann_ivfpq_topk_build(spark, sf_dir),
-    )
-
-
-def _dp_ann_ivfpq_topk_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVFADC two-stage search (datapipe/similarity.py ivfpq_* — Jégou
     et al. 2011 §IV, the IVF×PQ composition of VERDICT r6 #2): assign
     to 16 coarse lists, PQ-encode the residuals (8 subspaces × 16
@@ -1727,19 +1690,6 @@ ORACLES["dp_ann_ivfpq_topk"] = DP_IVFPQ_SQL
 
 
 def dp_ann_ivfpq_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Memoizing wrapper (keep_result, optimization r13 guide §5):
-    steady re-invocation measured ~1.7s driver plan build vs ~0.8s
-    execute; deterministic function of the embedding corpus frame
-    (the query slice derives from it in the build)."""
-    emb = model.embedding_corpus(spark, sf_dir)
-    return scratch.keep_result(
-        "q:dp_ann_ivfpq_knn_join",
-        emb,
-        lambda: _dp_ann_ivfpq_knn_join_build(spark, sf_dir),
-    )
-
-
-def _dp_ann_ivfpq_knn_join_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch IVFADC kNN join (datapipe/similarity.py ivfpq_knn_join):
     three corpus queries probe their 4 best residual-coded lists, ADC
     with per-(query, list) lookup tables, exact top-100 rerank, top-5
@@ -2229,22 +2179,13 @@ def dp_nb_lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Confusion matrix of the NB lang-id classifier scored back over
     its own training corpus (datapipe/text.py nb_lang_scores): how
     separable the language slices actually are — the acceptance check
-    a pipeline runs before trusting the classifier to route documents.
-
-    Memoized on the corpus plan (keep_result, optimization r13 guide
-    §5): steady re-invocation measured ~0.8s driver plan build (the
-    five-consumer token-pass tree + registry same-plan analyses)."""
-    docs = model.load(spark, sf_dir, "documents")
-
-    def build() -> DataFrame:
-        scores = text.nb_lang_scores(docs)
-        return (
-            scores.groupBy("lang", "pred_lang")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .orderBy("lang", "pred_lang")
-        )
-
-    return scratch.keep_result("q:dp_nb_lang_confusion", docs, build)
+    a pipeline runs before trusting the classifier to route documents."""
+    scores = text.nb_lang_scores(model.load(spark, sf_dir, "documents"))
+    return (
+        scores.groupBy("lang", "pred_lang")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+        .orderBy("lang", "pred_lang")
+    )
 
 
 DP_NB_CONFUSION_SQL = rf"""
@@ -2655,16 +2596,9 @@ def dp_winnow_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MOSS-style winnowing overlap report (datapipe/dedup.py
     winnow_fingerprints + winnow_similarity_report, Schleimer et al.
     2003): robust-winnowed k=4/w=4 fingerprints over the dedup corpus,
-    pairs sharing >= 3 rare fingerprints with exact-ppm overlap.
-
-    Memoized on the corpus plan (keep_result, optimization r13 guide
-    §5): steady re-invocation measured ~1.5s driver plan build."""
+    pairs sharing >= 3 rare fingerprints with exact-ppm overlap."""
     corpus = model.dedup_corpus(spark, sf_dir)
-    return scratch.keep_result(
-        "q:dp_winnow_report",
-        corpus,
-        lambda: dedup.winnow_similarity_report(corpus, portable=True),
-    )
+    return dedup.winnow_similarity_report(corpus, portable=True)
 
 
 DP_WINNOW_SQL = model.with_ctes(
@@ -3347,21 +3281,6 @@ ORACLES["dp_knn_label"] = DP_KNN_LABEL_SQL
 
 
 def dp_knn_label_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Memoizing wrapper (keep_result, optimization r13 guide §5):
-    steady re-invocation paid ~2.1s of driver plan construction (the
-    IVFADC probe/LUT/ADC Column trees through py4j + same-plan
-    analyses) against ~1.9s of execution; the build is a deterministic
-    function of the embeddings frame. Actions still execute from the
-    checkpointed index leaves."""
-    emb = model.load(spark, sf_dir, "embeddings")
-    return scratch.keep_result(
-        "q:dp_knn_label_ivfpq",
-        emb,
-        lambda: _dp_knn_label_ivfpq_build(spark, sf_dir),
-    )
-
-
-def _dp_knn_label_ivfpq_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     """kNN label propagation on the IVFADC scale path (VERDICT r8 #3):
     the same %50 holdout and majority-vote/lowest-label-tie law as
     dp_knn_label, but neighbors come from similarity.ivfpq_knn_join —
@@ -3575,19 +3494,6 @@ QS_QUERY_PPMS = (500000, 900000, 990000)
 
 
 def dp_qsketch_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Memoizing wrapper (keep_result, optimization r13 guide §5): the
-    built frame is a deterministic function of the documents frame,
-    and a steady-state re-invocation paid ~1.3s of pure driver time
-    (py4j Column-tree construction + the registry's same-plan analysis
-    of the corpus CASE-ladder) against ~0.3s of execution. Actions on
-    the returned frame still execute from its leaves."""
-    docs = model.load(spark, sf_dir, "documents")
-    return scratch.keep_result(
-        "q:dp_qsketch_tokens", docs, lambda: _dp_qsketch_tokens_build(spark, sf_dir)
-    )
-
-
-def _dp_qsketch_tokens_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Portable quantile sketch vs exact order statistics
     (datapipe/sketches.py qsketch_counts/qsketch_quantiles): per-doc
     token counts sketched into the <=160-row log-width histogram
@@ -3710,18 +3616,6 @@ ORACLES["dp_qsketch_tokens"] = DP_QSKETCH_SQL
 
 
 def dp_qsketch_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Memoizing wrapper — see dp_qsketch_tokens (same law, grouped;
-    steady re-invocation measured ~1.5s driver build vs ~0.7s
-    execute)."""
-    docs = model.load(spark, sf_dir, "documents")
-    return scratch.keep_result(
-        "q:dp_qsketch_by_source",
-        docs,
-        lambda: _dp_qsketch_by_source_build(spark, sf_dir),
-    )
-
-
-def _dp_qsketch_by_source_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Grouped quantile sketch (sketches.qsketch_counts_grouped /
     qsketch_quantiles_grouped): per-SOURCE p50/p90 token counts from
     one sketch pass — the dataset-card histogram shape without a
@@ -3844,19 +3738,10 @@ def dp_kmv_user_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     events, their intersection / union / Jaccard, next to the exact
     truths — the cross-set overlap dial HLL cannot provide. Both
     sketches are ≤256-row artifacts; the truth columns are the
-    exact-path cost the sketch exists to avoid at 100 TB.
-
-    Plan-memoized on the events frame (keep_result, optimization r13
-    guide §5; steady build ~0.5s measured)."""
-    ev = model.load(spark, sf_dir, "events")
-    return scratch.keep_result(
-        "q:dp_kmv_user_overlap", ev, lambda: _dp_kmv_user_overlap_build(ev)
-    )
-
-
-def _dp_kmv_user_overlap_build(ev: DataFrame) -> DataFrame:
+    exact-path cost the sketch exists to avoid at 100 TB."""
     from hadoop_ozone_spark.datapipe import sketches
 
+    ev = model.load(spark, sf_dir, "events")
     key = F.concat(
         F.col("user_id").cast("string"),
         F.lit("|"),
@@ -3864,10 +3749,10 @@ def _dp_kmv_user_overlap_build(ev: DataFrame) -> DataFrame:
     ).alias("k")
     a = ev.filter(F.col("event_type") == "click").select(key)
     b = ev.filter(F.col("event_type") == "purchase").select(key)
-    # exclusive scratch tag (ADVICE r13 high): this result is
-    # keep_result-memoized, and the corpus-drift query composes KMV
-    # sketches of a DIFFERENT input — sharing the default tag would
-    # let either build unpersist the other's checkpoint leaves
+    # exclusive scratch tag (ADVICE r13 high): the corpus-drift query
+    # composes KMV sketches of a DIFFERENT input — sharing the default
+    # tag would let either build unpersist the checkpoint leaves the
+    # other's returned frame still reads
     ops = sketches.kmv_set_ops(a, b, "k", tag="dp_kmv_user_overlap_ops")
     da, db = a.distinct(), b.distinct()
     ti = da.join(db, "k").agg(F.count(F.lit(1)).alias("true_inter"))
@@ -4086,28 +3971,21 @@ def dp_kmv_type_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     Jaccard for every unordered pair of event types. At 100 TB this is
     the dedup-planning matrix: |groups| sketches built in one pass,
     every pairwise overlap answered from ≤ |groups|·256 retained
-    hashes — no per-pair rescan of the corpus.
-
-    Plan-memoized on the events frame (keep_result, optimization r13
-    guide §5; steady build ~0.5s measured)."""
+    hashes — no per-pair rescan of the corpus."""
     from hadoop_ozone_spark.datapipe import sketches
 
     ev = model.load(spark, sf_dir, "events")
-
-    def build() -> DataFrame:
-        keyed = ev.select(
-            F.col("event_type"),
-            F.concat(
-                F.col("user_id").cast("string"),
-                F.lit("|"),
-                F.col("ts").cast("date").cast("string"),
-            ).alias("k"),
-        )
-        return sketches.kmv_pairwise_matrix(keyed, "event_type", "k").orderBy(
-            "key_a", "key_b"
-        )
-
-    return scratch.keep_result("q:dp_kmv_type_matrix", ev, build)
+    keyed = ev.select(
+        F.col("event_type"),
+        F.concat(
+            F.col("user_id").cast("string"),
+            F.lit("|"),
+            F.col("ts").cast("date").cast("string"),
+        ).alias("k"),
+    )
+    return sketches.kmv_pairwise_matrix(keyed, "event_type", "k").orderBy(
+        "key_a", "key_b"
+    )
 
 
 def _kmv_matrix_sql() -> str:
@@ -4343,33 +4221,18 @@ def dp_corpus_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     sides' sketches (see corpus_drift_report's note on its
     corpus-sized token cache); at 100 TB the report instead folds the
     write-time zone artifacts — corpus_drift_from_zones, pinned equal
-    to this path.
-
-    The BUILT report frame is memoized on the input plan (keep_result,
-    optimization r13 guide §5): a steady-state re-invocation paid
-    ~3.2s of pure driver time re-constructing the four sketch-build
-    Column trees through py4j and re-analyzing them for the registry's
-    same-plan tests, against ~0.5s of actual execution (gap probe:
-    3.85s driver gaps of a 4.05s wall). The report is a deterministic
-    function of the documents frame; every action on the returned
-    frame still executes from its (checkpointed-artifact) leaves. The
-    zone-fed path is NOT memoized — its state dirs are mutable inputs
-    (the scratch module's same-plan ⇒ same-data boundary)."""
+    to this path."""
     docs = model.load(spark, sf_dir, "documents")
-
-    def build() -> DataFrame:
-        side = F.when(
-            F.substring("source", 4, 10).cast("int") < 10, F.lit("a")
-        ).otherwise(F.lit("b"))
-        return corpus_drift_report(
-            docs.select(
-                side.alias("side"),
-                "doc_id",
-                F.lower(F.coalesce(F.col("text"), F.lit(""))).alias("text"),
-            )
+    side = F.when(
+        F.substring("source", 4, 10).cast("int") < 10, F.lit("a")
+    ).otherwise(F.lit("b"))
+    return corpus_drift_report(
+        docs.select(
+            side.alias("side"),
+            "doc_id",
+            F.lower(F.coalesce(F.col("text"), F.lit(""))).alias("text"),
         )
-
-    return scratch.keep_result("q:dp_corpus_drift", docs, build)
+    )
 
 
 def _corpus_drift_sql() -> str:
@@ -4450,19 +4313,6 @@ BPE_VOCAB_N_MERGES = 8
 
 
 def dp_bpe_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Memoizing wrapper (keep_result, optimization r13 guide §5): the
-    merge log is the output of a deterministic driver loop over the
-    documents frame — the l1_bucket_links/dedup_clusters fixpoint-memo
-    discipline. A steady re-invocation re-ran all N merge rounds
-    (~2.9s of driver-paced actions) to reproduce a ≤N-row artifact it
-    had already built this session."""
-    docs = model.load(spark, sf_dir, "documents")
-    return scratch.keep_result(
-        "q:dp_bpe_vocab", docs, lambda: _dp_bpe_vocab_build(spark, sf_dir)
-    )
-
-
-def _dp_bpe_vocab_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The iterative BPE merge ladder (VERDICT r9 #4): run the full
     top-merge loop of byte-pair-encoding tokenizer training
     (datapipe/text.py bpe_learn_merges — Sennrich et al. 2016) to
@@ -4560,19 +4410,9 @@ def dp_media_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     guaranteed recovered (4 bands cover hamming <= 3 by pigeonhole;
     recall pinned in tests/test_datapipe.py). The DuckDB twin replays
     the same grayscale law, sample grid, bit layout, banding, and
-    verify.
-
-    Memoized on the corpus plan (keep_result, optimization r13 guide
-    §5) — the hash frame itself is already a checkpoint leaf; this
-    additionally skips rebuilding the banding/verify tree per call."""
+    verify."""
     docs = model.load(spark, sf_dir, "documents")
-    return scratch.keep_result(
-        "q:dp_media_near_dup",
-        docs,
-        lambda: multimodal.media_near_dup_pairs(
-            multimodal.synthesize_thumbnails(docs)
-        ),
-    )
+    return multimodal.media_near_dup_pairs(multimodal.synthesize_thumbnails(docs))
 
 
 def _media_hashes_ctes(recursive: bool = False, deep: bool = False) -> str:
@@ -4740,19 +4580,9 @@ def dp_media_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same input — it is the form a curation run executes (keep one
     per cluster). The DuckDB twin replays the hash law, class
     collapse, rep banding, and the CC fixpoint (the dp_dedup_clusters
-    recursive-CTE discipline).
-
-    Memoized on the corpus plan (keep_result, optimization r13 guide
-    §5) — the CC fold inside is already input-memoized; this also
-    skips rebuilding the class-collapse/banding/size-tail tree."""
+    recursive-CTE discipline)."""
     docs = model.load(spark, sf_dir, "documents")
-    return scratch.keep_result(
-        "q:dp_media_dup_clusters",
-        docs,
-        lambda: multimodal.media_dup_clusters(
-            multimodal.synthesize_thumbnails(docs)
-        ),
-    )
+    return multimodal.media_dup_clusters(multimodal.synthesize_thumbnails(docs))
 
 
 def _media_dup_clusters_sql() -> str:

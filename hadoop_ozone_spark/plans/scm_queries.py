@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hadoop_ozone_spark import model, scratch
+from hadoop_ozone_spark import model
 from hadoop_ozone_spark.operators import scm
 
 
@@ -432,28 +432,17 @@ _RM_DELETE_STACK = (
 
 def rm1_replication_actions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ReplicationManager action set: ADD/DELETE replica commands with
-    rack-aware targets (operators/scm.py replication_actions law).
-
-    Plan-memoized on the replica plane (keep_result, optimization r13
-    guide §5): steady re-invocation measured ~1.2s of driver plan
-    build ahead of ~2.7s of floor-pinned execution; all three inputs
-    are (session, sf_dir)-immutable model memos whose plans change
-    together, so the replica frame is a sufficient key."""
+    rack-aware targets (operators/scm.py replication_actions law)."""
     reps = model.rm_replicas_bucketed(spark, sf_dir)
-    return scratch.keep_result(
-        "q:rm1_replication_actions",
+    return scm.replication_actions(
+        model.containers(spark, sf_dir),
         reps,
-        lambda: scm.replication_actions(
-            model.containers(spark, sf_dir),
-            reps,
-            model.datanodes(spark, sf_dir),
-        ),
+        model.datanodes(spark, sf_dir),
     )
 
 
-# named so the decomposed sf10 replay (tools/sf10_decompose.py) can
-# re-run the per-container stack in container slices without restating
-# the law
+# named so tests/test_replication_actions.py can replay the per-container
+# stack over its own tables without restating the law
 _RM1_BODY = """SELECT * FROM (
   SELECT container_id, 'MISSING' AS action,
          CAST(NULL AS BIGINT) AS datanode_id, CAST(NULL AS VARCHAR) AS rack,
@@ -590,18 +579,9 @@ ORACLES["h1_access_heatmap"] = H1_SQL
 def rm3_close_actions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ReplicationManager close dispatch: CLOSING resend, quasi-closed
     force-close at max BCSID under quorum, unstable-replica handling
-    (operators/scm.py close_actions law).
-
-    Plan-memoized on the replica-details plane (keep_result — see
-    rm1_replication_actions)."""
+    (operators/scm.py close_actions law)."""
     reps = model.rm_replica_details_bucketed(spark, sf_dir)
-    return scratch.keep_result(
-        "q:rm3_close_actions",
-        reps,
-        lambda: scm.close_actions(
-            model.rm_container_details(spark, sf_dir), reps
-        ),
-    )
+    return scm.close_actions(model.rm_container_details(spark, sf_dir), reps)
 
 
 RM3_SQL = model.with_ctes(
@@ -716,21 +696,14 @@ def rm4_delete_actions(spark: SparkSession, sf_dir: str) -> DataFrame:
     state in which some CLOSED containers genuinely hold no keys, so
     the isContainerEmpty branch has verifiable work (with the raw shim
     every container is referenced and the branch would be dead under
-    test).
-
-    Plan-memoized on the key plane (keep_result — see
-    rm1_replication_actions)."""
+    test)."""
     from pyspark.sql import functions as F
 
     keys = model.om_keys(spark, sf_dir).filter(F.col("container_id") % 5 != 2)
-    return scratch.keep_result(
-        "q:rm4_delete_actions",
+    return scm.delete_actions(
+        model.rm_container_details(spark, sf_dir),
+        model.rm_replica_details_bucketed(spark, sf_dir),
         keys,
-        lambda: scm.delete_actions(
-            model.rm_container_details(spark, sf_dir),
-            model.rm_replica_details_bucketed(spark, sf_dir),
-            keys,
-        ),
     )
 
 
@@ -881,26 +854,17 @@ def bm1_balancer_moves(spark: SparkSession, sf_dir: str) -> DataFrame:
     budgets (operators/scm.py balancer_moves — repo-defined determinized
     pick law; v1.2.0 has no in-tree move chooser to hash-match).
     Threshold 0.002 fits the synthetic cluster's utilization spread the
-    way an admin would tune ozone's threshold to their fleet.
-
-    Plan-memoized on the replica plane (keep_result — see
-    rm1_replication_actions)."""
+    way an admin would tune ozone's threshold to their fleet."""
     reps = model.container_replicas(spark, sf_dir)
-    return scratch.keep_result(
-        "q:bm1_balancer_moves",
+    return scm.balancer_moves(
+        model.datanodes(spark, sf_dir),
         reps,
-        lambda: scm.balancer_moves(
-            model.datanodes(spark, sf_dir),
-            reps,
-            model.containers(spark, sf_dir),
-            threshold=0.002,
-        ),
+        model.containers(spark, sf_dir),
+        threshold=0.002,
     )
 
 
-# the bm_pick pairing, named so the sf10 decomposed replay
-# (tools/sf10_decompose.py) can re-run it per container slice without
-# restating the law
+# the bm_pick pairing
 _BM_PICK_SQL = """SELECT *, row_number() OVER (PARTITION BY container_id
       ORDER BY bytes_under_lower DESC, target_datanode_id) AS t1
   FROM (

@@ -48,9 +48,6 @@ serially per session, matching the one-live-generation contract.
 
 from __future__ import annotations
 
-import os
-from typing import Callable
-
 from pyspark.sql import DataFrame
 
 try:
@@ -64,22 +61,6 @@ _CURSOR: dict[tuple[str, str], int] = {}
 # keep_ckpt's parallel registry: slot holds (plan_frame, ckpt_frame)
 _CKPT_SLOTS: dict[tuple[str, str], list[tuple[DataFrame, DataFrame]]] = {}
 _CKPT_CURSOR: dict[tuple[str, str], int] = {}
-# keep_result's registry: (session_key, tag, params_repr) →
-# (key_frame, result_frame)
-_RESULT_SLOTS: dict[tuple[str, str, str], tuple[DataFrame, DataFrame]] = {}
-
-# Set SPARK_GRAFT_NO_MEMO=1 to disable keep_result memoization: every
-# call rebuilds (and re-executes) the result from its inputs. The bench
-# harness sets this for its timed runs so steady-state numbers measure
-# query computation, not memo hits (VERDICT r13 #1); serving sessions
-# leave it unset. keep/keep_ckpt (bounded persisted INTERMEDIATES
-# inside one query tree) are deliberately NOT governed by the flag —
-# they are the within-query cache discipline the bench has always
-# measured, not a result cache.
-_NO_MEMO_ENV = "SPARK_GRAFT_NO_MEMO"
-# the values that switch it on; any other value, "0" and "" included,
-# leaves the memo on
-_TRUTHY = ("1", "true", "yes", "on")
 
 
 def _session_key(df_or_spark) -> str:
@@ -171,21 +152,8 @@ def keep_ckpt(tag: str, df: DataFrame) -> DataFrame:
 
     Same slot/cursor/same-plan-reuse contract as :func:`keep` — the
     plan comparison runs on the PRE-checkpoint frames, so steady-state
-    invocations reuse one checkpoint instead of re-materializing.
-
-    INVARIANT with :func:`keep_result` (ADVICE r13): a memoized result
-    frame may hang off checkpoint leaves registered here. Unpersisting
-    a checkpoint DESTROYS it (lineage is truncated — nothing can
-    recompute the blocks), so replacing a generation while a memoized
-    result still references it would leave that result un-actionable.
-    Guard: a generation replacement drops every keep_result entry for
-    the session (conservative — replacement only happens when an
-    operator's INPUT changed, which is rare outside streaming, and a
-    dropped memo merely rebuilds). Call sites sharing one operator
-    should still pass exclusive tags per input identity (the KMV
-    set-op sites do) so steady-state interleaving never replaces."""
-    skey = _session_key(df)
-    key = (skey, tag)
+    invocations reuse one checkpoint instead of re-materializing."""
+    key = (_session_key(df), tag)
     i = _CKPT_CURSOR.get(key, 0)
     _CKPT_CURSOR[key] = i + 1
     slots = _CKPT_SLOTS.setdefault(key, [])
@@ -197,10 +165,6 @@ def keep_ckpt(tag: str, df: DataFrame) -> DataFrame:
             old_ckpt.unpersist()
         except Exception:
             pass  # session gone / already unpersisted
-        # a replaced checkpoint may back a memoized result — drop the
-        # session's result memos rather than serve a broken frame
-        for rkey in [k for k in _RESULT_SLOTS if k[0] == skey]:
-            del _RESULT_SLOTS[rkey]
         ck = df.localCheckpoint()
         slots[i] = (df, ck)
         return ck
@@ -209,106 +173,6 @@ def keep_ckpt(tag: str, df: DataFrame) -> DataFrame:
     return ck
 
 
-def keep_result(
-    tag: str,
-    key_df: DataFrame,
-    build: Callable[[], DataFrame],
-    params: tuple | None = None,
-) -> DataFrame:
-    """Memoize the RESULT frame of an iterative builder, keyed on the
-    plan of its INPUT frame plus the builder's parameters
-    (optimization r13, guide §5; params key added r14 — VERDICT r13
-    what's-wrong #2: a second in-session call with the same input but
-    a different ``max_iters``/``max_depth`` must rebuild, not silently
-    serve the first call's result).
-
-    Fixpoint loops (pointer doubling, min-label propagation) run
-    data-dependent rounds whose per-round localCheckpoints give the
-    OUTPUT a plan embedding fresh RDD ids on every invocation — the
-    :func:`keep`/:func:`keep_ckpt` same-plan test can therefore never
-    hit across invocations, and a steady-state caller re-ran the whole
-    loop (one driver action plus a job per round) on every call. The
-    INPUT plan is the right identity for the artifact: the loops are
-    deterministic functions of their (input, params), and the module's
-    same-plan ⇒ same-data assumption (header docstring) already
-    governs every registered frame.
-
-    One live generation per (session, tag, params): a key-plan change
-    drops the stored refs — the superseded loop's checkpoint blocks
-    are reclaimed by the ContextCleaner once unreferenced, the same
-    lifecycle the un-memoized loops had — and re-runs the builder.
-
-    CONTRACT (ADVICE r13): the stored result may reference keep_ckpt
-    artifacts, so an inner operator's keep_ckpt tag must be exclusive
-    to ONE input identity per session; keep_ckpt additionally drops
-    the session's result memos whenever it replaces a generation, so
-    a violated exclusivity degrades to a rebuild, never to serving a
-    frame over destroyed checkpoint blocks. Mutable-source frames
-    (zone/state-dir reads that a stream rewrites in-session) must
-    never be routed through here — see :func:`invalidate` for the
-    explicit staleness hook a mutable-source caller would need.
-
-    ``SPARK_GRAFT_NO_MEMO=1`` (or true/yes/on) disables the memo
-    entirely (every call rebuilds): the bench's steady-state timings
-    run under it so they measure computation, not memo hits (VERDICT
-    r13 #1)."""
-    if os.environ.get(_NO_MEMO_ENV, "").strip().lower() in _TRUTHY:
-        return build()
-    skey = _session_key(key_df)
-    _purge_stopped_sessions(key_df.sparkSession, skey)
-    key = (skey, tag, "" if params is None else repr(params))
-    prev = _RESULT_SLOTS.get(key)
-    if prev is not None and _same_plan(prev[0], key_df):
-        return prev[1]
-    out = build()
-    _RESULT_SLOTS[key] = (key_df, out)
-    return out
-
-
-# session_key → weakref to the live SparkSession, for purging memo
-# entries of stopped sessions (ADVICE r13: a long-lived multi-session
-# process otherwise accumulates one dead entry per (session, tag),
-# pinning full result plans on the py4j side)
-_SESSION_REFS: dict[str, "object"] = {}
-
-
-def _purge_stopped_sessions(spark, skey: str) -> None:
-    import weakref
-
-    if skey not in _SESSION_REFS:
-        _SESSION_REFS[skey] = weakref.ref(spark)
-    dead = set()
-    for other, ref in list(_SESSION_REFS.items()):
-        if other == skey:
-            continue
-        sess = ref()
-        stopped = sess is None
-        if not stopped:
-            try:
-                stopped = sess.sparkContext._jsc is None
-            except Exception:
-                stopped = True
-        if stopped:
-            dead.add(other)
-            del _SESSION_REFS[other]
-    if dead:
-        for key in [k for k in _RESULT_SLOTS if k[0] in dead]:
-            del _RESULT_SLOTS[key]
-
-
-def invalidate(spark=None) -> None:
-    """Drop memoized results (and, with them, the same-plan ⇒
-    same-data assumption's blast radius) for ``spark`` — or for every
-    session when omitted. The explicit staleness hook (VERDICT r13
-    what's-wrong #4): a caller that rewrites files under a path a
-    memoized result reads (same plan, new data) must invalidate before
-    the next invocation, alongside ``spark.catalog.refreshByPath``.
-    No registered operator reads mutable sources through keep_result
-    today (zone-fed paths are deliberately unmemoized); this hook is
-    the contract any future one must wire up."""
-    if spark is None:
-        _RESULT_SLOTS.clear()
-        return
-    skey = _session_key(spark)
-    for key in [k for k in _RESULT_SLOTS if k[0] == skey]:
-        del _RESULT_SLOTS[key]
+# No engine caller: exists only for perfbench/run.py's WRAPPED list; ROADMAP item 6 deletes both.
+def keep_result(tag, key_df, build, params=None):
+    return build()

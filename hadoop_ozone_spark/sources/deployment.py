@@ -6,7 +6,7 @@ answers every query from that copy, applying deltas as they stream in
 (OzoneManagerServiceProviderImpl.java:291-430). The TPC-H shim in
 ``model`` stands in for the checkpoint; THIS module is the bootstrap —
 it materializes every derived plane ONCE into the physical layout that
-ARCHITECTURE.md specifies and ``tools/scale_probe.py`` measures, and
+ARCHITECTURE.md specifies (``perfbench/run.py --scale`` measures it), and
 the query layer (``model``) reads the materialized tables whenever the
 ``SPARK_GRAFT_SNAPSHOT_DIR`` flag points at a built snapshot:
 
