@@ -452,6 +452,22 @@ def _q_ppms_sql(q_ppms: tuple[int, ...]) -> str:
     return "array(" + ", ".join(f"CAST({q} AS BIGINT)" for q in q_ppms) + ")"
 
 
+def qsketch_quantile_sql(counts: str, q_ppm: int) -> str:
+    """qsketch_quantiles' est for one ``q_ppm`` over a sketch held as
+    the SQL array ``counts`` of struct<bin, cnt> (any order): the
+    lowest bin whose cumulative count reaches rank ceil(q*n), same
+    integer law. NULL for an empty sketch, where qsketch_quantiles
+    yields no row."""
+    n = f"aggregate({counts}, 0L, (_s, _c) -> _s + _c.cnt)"
+    rank = f"(CAST({q_ppm} AS BIGINT) * {n} + 999999) DIV 1000000"
+    cum = f"aggregate(filter({counts}, _y -> _y.bin <= _x.bin), 0L, (_s, _y) -> _s + _y.cnt)"
+    b = f"array_min(transform(filter({counts}, _x -> {cum} >= {rank}), _x -> _x.bin))"
+    return (
+        f"CAST(CASE WHEN {b} = 0 THEN 0 ELSE element_at({_QS_BOUNDS_SQL}, {b}) END"
+        " AS BIGINT)"
+    )
+
+
 def qsketch_counts(df: DataFrame, col: str) -> DataFrame:
     """(bin, cnt): the sketch itself. One map-side-combinable groupBy;
     <= len(QS_THRESHOLDS)+1 rows out regardless of input; SUM-merge."""
@@ -654,13 +670,18 @@ KMV_K = 256
 _LANE_MOD = 2**LANE_BITS
 
 
+def kmv_hash(col: Column) -> Column:
+    """The KMV hash of a value: its md5 lane mod 2^LANE_BITS."""
+    return F.pmod(md5_lane(col), F.lit(_LANE_MOD))
+
+
 def kmv_sketch(df: DataFrame, col: str) -> DataFrame:
     """(h,): the KMV_K smallest DISTINCT md5-lane hashes of ``col``.
     groupBy(h) is map-side combinable; orderBy+limit compiles to
     TakeOrderedAndProject (per-partition top-k, merged at the driver) —
     the artifact never exceeds KMV_K rows."""
     hashes = (
-        df.select(F.pmod(md5_lane(F.col(col)), F.lit(_LANE_MOD)).alias("h"))
+        df.select(kmv_hash(F.col(col)).alias("h"))
         .filter(F.col("h").isNotNull())  # NULL input -> NULL hash; see header
         .groupBy("h")
         .agg(F.count(F.lit(1)).alias("_c"))
@@ -732,8 +753,8 @@ def kmv_set_ops_from_sketches(
     # function return; raw .persist() would leak one cached generation
     # per invocation with changing inputs). keep_ckpt, not keep
     # (optimization r13): the artifacts are <= KMV_K+1 rows but their
-    # plans embed the full input tree (corpus token explosions in the
-    # drift path) — checkpointing makes every downstream set-op leg
+    # plans embed the full input tree (the events keying in
+    # dp_kmv_user_overlap) — checkpointing makes every downstream set-op leg
     # (theta, merged, per-side estimates: 5+ actions) re-plan against a
     # leaf instead of re-optimizing the corpus tree per action.
     scratch.fresh(tag)
@@ -804,6 +825,24 @@ def kmv_set_ops_from_sketches(
         F.expr("_inter * 1000000 DIV greatest(_uni, 1)").alias(
             "jaccard_ppm"
         ),
+    )
+
+
+def kmv_union_jaccard_sql(ha: str, hb: str) -> tuple[str, str]:
+    """(union_est, jaccard_ppm) SQL over two sketches held as the SQL
+    arrays ``ha``/``hb`` of their distinct hashes: kmv_set_ops'
+    theta, sample counts and double arithmetic, op for op."""
+
+    def theta(h: str) -> str:
+        return f"IF(size({h}) >= {KMV_K}, array_max({h}), {_LANE_MOD}L)"
+
+    th = f"least({theta(ha)}, {theta(hb)})"
+    uni = f"CAST(size(filter(array_union({ha}, {hb}), _h -> _h < {th})) AS BIGINT)"
+    inter = f"CAST(size(filter(array_intersect({ha}, {hb}), _h -> _h < {th})) AS BIGINT)"
+    scale = f"(CAST({_LANE_MOD}L AS DOUBLE) / CAST({th} AS DOUBLE))"
+    return (
+        f"CAST(round(CAST({uni} AS DOUBLE) * {scale}) AS BIGINT)",
+        f"{inter} * 1000000 DIV greatest({uni}, 1)",
     )
 
 

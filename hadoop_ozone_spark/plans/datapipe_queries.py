@@ -4007,157 +4007,117 @@ QUERIES["dp_kmv_type_matrix"] = dp_kmv_type_matrix
 ORACLES["dp_kmv_type_matrix"] = DP_KMV_MATRIX_SQL
 
 
-def _drift_assemble(
-    ops: DataFrame,
-    ka: DataFrame,
-    kb: DataFrame,
-    counts_a: DataFrame,
-    counts_b: DataFrame,
-) -> DataFrame:
-    """Assemble the 9-metric long-format drift frame from the two
-    sides' sketch artifacts: KMV set-ops (ops), MG summary key frames
-    (ka/kb: one ``key`` column), and per-side quantile-sketch count
-    frames. Shared by the corpus-scan path (corpus_drift_report) and
-    the zone-fed path (corpus_drift_from_zones) — the report is a
-    pure function of the artifacts, wherever they came from."""
+def _drift_report(kmv: DataFrame, mg: DataFrame, qs: DataFrame) -> DataFrame:
+    """The 9-metric long-format drift frame from the two sides' sketch
+    artifacts, each given in long form keyed by ``side`` ('a'/'b'):
+    kmv (side, h) — the side's KMV hashes; mg (side, key) — its
+    Misra-Gries summary keys; qs (side, bin, cnt) — its quantile-sketch
+    bins. Shared by the corpus-scan path (corpus_drift_report) and the
+    zone-fed path (corpus_drift_from_zones) — the report is a pure
+    function of the artifacts, wherever they came from.
+
+    One global aggregate folds the artifacts into ONE row of per-side
+    arrays (<= KMV_K hashes, <= MG_K keys, <= len(QS_THRESHOLDS)+1
+    bins); the metrics are one projection of higher-order functions
+    over that row, exploded once — no join, no per-metric leg. A side
+    with no quantile bins (no docs) yields no p50/p90 rows, as
+    qsketch_quantiles yields none."""
     from hadoop_ozone_spark.datapipe import sketches
 
-    # each 1-row source frame contributes ONE union leg that explodes
-    # its (metric, value) pairs inline (optimization r13, guide §5):
-    # the previous one-leg-per-metric shape re-ran the frame's subtree
-    # (kmv_set_ops alone carries 4 broadcast futures) once per metric
-    # on every action — same rows, same values, half the jobs
-    def metrics(frame: DataFrame, pairs: list[tuple[str, Column]]) -> DataFrame:
-        return frame.select(
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(name).alias("metric"),
-                            col.cast("long").alias("value"),
-                        )
-                        for name, col in pairs
-                    ]
-                )
-            ).alias("mv")
-        ).select("mv.metric", "mv.value")
-
-    rows = [
-        metrics(
-            ops,
-            [
-                ("vocab_jaccard_ppm", F.col("jaccard_ppm")),
-                ("vocab_union_est", F.col("union_est")),
-            ],
-        )
-    ]
-    hh = (
-        ka.select("key", F.lit(1).alias("_a"))
-        .join(kb.select("key", F.lit(1).alias("_b")), "key", "full")
+    # each leg's columns are NULL on the other legs' rows
+    row = (
+        kmv.unionByName(mg, allowMissingColumns=True)
+        .unionByName(qs, allowMissingColumns=True)
         .agg(
-            F.coalesce(
-                F.sum(F.coalesce("_a", F.lit(0)) * F.coalesce("_b", F.lit(0))),
-                F.lit(0),
-            ).alias("shared"),
-            F.coalesce(
-                F.sum(
-                    F.coalesce("_a", F.lit(0)) * (1 - F.coalesce("_b", F.lit(0)))
-                ),
-                F.lit(0),
-            ).alias("only_a"),
-            F.coalesce(
-                F.sum(
-                    (1 - F.coalesce("_a", F.lit(0))) * F.coalesce("_b", F.lit(0))
-                ),
-                F.lit(0),
-            ).alias("only_b"),
+            *[
+                F.expr(
+                    f"{agg}(IF(side = '{s}' AND {leg} IS NOT NULL, {val}, NULL))"
+                ).alias(f"{name}_{s}")
+                for s in ("a", "b")
+                for name, agg, leg, val in (
+                    ("h", "collect_set", "h", "h"),
+                    ("k", "collect_set", "key", "key"),
+                    ("q", "collect_list", "bin", "named_struct('bin', bin, 'cnt', cnt)"),
+                )
+            ]
         )
     )
-    rows.append(
-        metrics(
-            hh,
-            [
-                ("hh_shared", F.col("shared")),
-                ("hh_only_a", F.col("only_a")),
-                ("hh_only_b", F.col("only_b")),
-            ],
-        )
+    union_est, jaccard_ppm = sketches.kmv_union_jaccard_sql("h_a", "h_b")
+    metrics = {
+        "hh_only_a": "size(array_except(k_a, k_b))",
+        "hh_only_b": "size(array_except(k_b, k_a))",
+        "hh_shared": "size(array_intersect(k_a, k_b))",
+        "vocab_jaccard_ppm": jaccard_ppm,
+        "vocab_union_est": union_est,
+    }
+    for q, p in ((500000, "p50"), (900000, "p90")):
+        for s in ("a", "b"):
+            metrics[f"{p}_tokens_{s}"] = sketches.qsketch_quantile_sql(f"q_{s}", q)
+    legs = ", ".join(f"'{m}', CAST({v} AS BIGINT)" for m, v in sorted(metrics.items()))
+    return (
+        row.selectExpr(f"stack({len(metrics)}, {legs}) AS (metric, value)")
+        .filter(F.col("value").isNotNull())
+        .orderBy("metric")
     )
-    for s, counts in (("a", counts_a), ("b", counts_b)):
-        q = sketches.qsketch_quantiles(counts, (500000, 900000))
-        rows.append(
-            q.select(
-                F.concat(
-                    F.when(F.col("q_ppm") == 500000, F.lit("p50")).otherwise(
-                        F.lit("p90")
-                    ),
-                    F.lit(f"_tokens_{s}"),
-                ).alias("metric"),
-                F.col("est").cast("long").alias("value"),
-            )
-        )
-    out = rows[0]
-    for r in rows[1:]:
-        out = out.unionByName(r)
-    return out.orderBy("metric")
 
 
 def corpus_drift_report(tagged: DataFrame) -> DataFrame:
     """Corpus-scan drift path over a (side, doc_id, text) frame (text
-    already lowercased): explode tokens once, build each side's
-    KMV / MG / quantile sketches, assemble the report.
-
-    NOTE (ADVICE r9): the shared token-explosion persist below is
-    CORPUS-sized — a bench-scale optimization that saves the 4 sketch
-    builds re-exploding the corpus each. At 100 TB this path is not
-    what runs: the sides' sketches are the write-time zone artifacts
-    the streams already maintain, and the report is the pure
-    artifact-fold in corpus_drift_from_zones (pinned equal in
+    already lowercased), as one lazy plan: one (side, token, cnt)
+    aggregate over the token explosion feeds two per-side rank windows
+    — the KMV_K smallest distinct hashes (dense_rank, so tied hashes
+    share a rank as kmv_sketch's distinct hashes do) and the top MG_K+1
+    counts (row_number by cnt desc, token asc, the mg_summary order),
+    both under Spark's WindowGroupLimit threshold, so each side's top-k
+    is cut per partition before the shuffle — plus the per-doc
+    qsketch bin counts; _drift_report folds them. At 100 TB the sides'
+    sketches are instead the write-time zone artifacts the streams
+    maintain, folded by corpus_drift_from_zones (pinned equal in
     tests/test_sketch_stream.py)."""
-    from hadoop_ozone_spark import scratch
+    from pyspark.sql import Window
+
     from hadoop_ozone_spark.datapipe import sketches
 
-    scratch.fresh("dp_corpus_drift_tok")
-    tok = scratch.keep(
-        "dp_corpus_drift_tok",
-        tagged.select(
-            "side", F.explode(text.tokens(F.col("text"))).alias("token")
-        ),
+    counts = (
+        tagged.select("side", F.explode(text.tokens(F.col("text"))).alias("token"))
+        .groupBy("side", "token")
+        .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    a_tok = tok.filter(F.col("side") == "a").select("token")
-    b_tok = tok.filter(F.col("side") == "b").select("token")
-    # exclusive scratch tag — see dp_kmv_user_overlap (ADVICE r13 high)
-    ops = sketches.kmv_set_ops(a_tok, b_tok, "token", tag="dp_corpus_drift_ops")
-    # checkpoint the two <=MG_K+1-row heavy-hitter key frames
-    # (optimization r13, guide §7.3): un-truncated, each embeds the
-    # corpus groupBy + TakeOrdered tree in the assembled report plan —
-    # the 9-leg union then re-optimizes both trees on every action
-    scratch.fresh("dp_corpus_drift_mg")
-    ka = scratch.keep_ckpt(
-        "dp_corpus_drift_mg", sketches.mg_summary(a_tok, "token").select("key")
+    kmv = (
+        counts.select("side", sketches.kmv_hash(F.col("token")).alias("h"))
+        .withColumn("_r", F.dense_rank().over(Window.partitionBy("side").orderBy("h")))
+        .filter(F.col("_r") <= sketches.KMV_K)
+        .select("side", "h")
     )
-    kb = scratch.keep_ckpt(
-        "dp_corpus_drift_mg", sketches.mg_summary(b_tok, "token").select("key")
-    )
-    tc = tagged.select(
-        "side",
-        F.size(text.tokens(F.col("text"))).cast("long").alias("n_tokens"),
-    )
-    # persist each side's <=160-row sketch (the dp_qsketch precedent):
-    # qsketch_quantiles references its counts three times (n, cum,
-    # pick) — uncached, the corpus CASE-ladder pass reruns per
-    # reference (measured 25s -> <1s at sf0.1)
-    scratch.fresh("dp_corpus_drift_qs")
-    counts = {
-        s: scratch.keep_ckpt(
-            "dp_corpus_drift_qs",
-            sketches.qsketch_counts(
-                tc.filter(F.col("side") == s).select("n_tokens"), "n_tokens"
-            ),
+    # mg_summary's law over the top MG_K+1 rows: threshold t = the
+    # (MG_K+1)-th count when there are that many keys, else 0; the
+    # summary keys are those counted above t, all of which rank <= MG_K
+    by_side = Window.partitionBy("side")
+    mg = (
+        counts.withColumn(
+            "_r",
+            F.row_number().over(by_side.orderBy(F.desc("cnt"), F.asc("token"))),
         )
-        for s in ("a", "b")
-    }
-    return _drift_assemble(ops, ka, kb, counts["a"], counts["b"])
+        .filter(F.col("_r") <= sketches.MG_K + 1)
+        .withColumn(
+            "_t",
+            F.when(
+                F.count(F.lit(1)).over(by_side) > sketches.MG_K,
+                F.min("cnt").over(by_side),
+            ).otherwise(F.lit(0)),
+        )
+        .filter(F.col("cnt") > F.col("_t"))
+        .select("side", F.col("token").alias("key"))
+    )
+    qs = sketches.qsketch_counts_grouped(
+        tagged.select(
+            "side",
+            F.size(text.tokens(F.col("text"))).cast("long").alias("n_tokens"),
+        ),
+        "side",
+        "n_tokens",
+    ).withColumnRenamed("key", "side")
+    return _drift_report(kmv, mg, qs)
 
 
 def corpus_drift_from_zones(
@@ -4174,33 +4134,22 @@ def corpus_drift_from_zones(
     obeys the mg_merge bound law and equals the batch summary exactly
     whenever no zone truncated (pinned: drift(zones) ≡ drift(corpus)
     in tests/test_sketch_stream.py)."""
-    from hadoop_ozone_spark import scratch
-    from hadoop_ozone_spark.datapipe import sketches
     from hadoop_ozone_spark.streaming import sketch_stream
 
-    ops = sketches.kmv_set_ops_from_sketches(
-        sketch_stream.read_kmv_sketch(spark, state_a),
-        sketch_stream.read_kmv_sketch(spark, state_b),
-        tag="corpus_drift_zones_kmv",
-    )
-    ka = (
-        sketch_stream.read_mg_summary(spark, state_a)
+    def sides(read) -> DataFrame:
+        a, b = (
+            read(spark, state).withColumn("side", F.lit(s))
+            for s, state in (("a", state_a), ("b", state_b))
+        )
+        return a.unionByName(b)
+
+    return _drift_report(
+        sides(sketch_stream.read_kmv_sketch),
+        sides(sketch_stream.read_mg_summary)
         .filter(F.col("key").isNotNull())
-        .select("key")
+        .select("side", "key"),
+        sides(sketch_stream.read_qsketch_counts),
     )
-    kb = (
-        sketch_stream.read_mg_summary(spark, state_b)
-        .filter(F.col("key").isNotNull())
-        .select("key")
-    )
-    scratch.fresh("corpus_drift_zones_qs")
-    counts_a = scratch.keep_ckpt(
-        "corpus_drift_zones_qs", sketch_stream.read_qsketch_counts(spark, state_a)
-    )
-    counts_b = scratch.keep_ckpt(
-        "corpus_drift_zones_qs", sketch_stream.read_qsketch_counts(spark, state_b)
-    )
-    return _drift_assemble(ops, ka, kb, counts_a, counts_b)
 
 
 def dp_corpus_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4218,10 +4167,9 @@ def dp_corpus_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     One long-format (metric, value) frame, every leg's OUTPUT
     artifact-bounded. This registration scans the corpus to build the
-    sides' sketches (see corpus_drift_report's note on its
-    corpus-sized token cache); at 100 TB the report instead folds the
-    write-time zone artifacts — corpus_drift_from_zones, pinned equal
-    to this path."""
+    sides' sketches in one lazy plan (corpus_drift_report); at 100 TB
+    the report instead folds the write-time zone artifacts —
+    corpus_drift_from_zones, pinned equal to this path."""
     docs = model.load(spark, sf_dir, "documents")
     side = F.when(
         F.substring("source", 4, 10).cast("int") < 10, F.lit("a")

@@ -36,37 +36,43 @@ def apply_events_to_snapshot(
     # partition overwrite is scoped to THIS write via the writer option,
     # never the shared session conf (a later static full-bootstrap
     # overwrite on the same session must not inherit dynamic mode).
-    touched_df = events.select("volume", "bucket").distinct().persist()
+    touched_df = events.select("volume", "bucket").distinct()
     snap = spark.read.parquet(snapshot_dir)
     affected_old = snap.join(F.broadcast(touched_df), ["volume", "bucket"], "left_semi")
     all_batch_keys = events.select(key_col).distinct()
     kept = affected_old.join(all_batch_keys, key_col, "left_anti")
     cols = snap.columns
-    merged = (
-        kept.select(*cols).unionByName(compacted.select(*cols)).persist()
-    )
-    (
-        merged.repartition("volume", "bucket")
-        .sortWithinPartitions("key")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("volume", "bucket")
-        .parquet(snapshot_dir)
-    )
+    # The merge runs ONCE, into a checkpoint leaf that no longer reads
+    # snapshot_dir. A persist would not do: its plan reads the path the
+    # write below overwrites, the write's path refresh drops that cache,
+    # and every later action on it re-runs the merge over the rewritten
+    # files. (Not scratch.keep_ckpt either — its same-plan reuse would
+    # serve the previous batch's rows for a byte-identical plan over
+    # rewritten files.)
+    merged = kept.select(*cols).unionByName(compacted.select(*cols)).localCheckpoint()
     # Dynamic overwrite only replaces partitions PRESENT in the written
     # data. A touched partition whose every row was deleted produces no
     # output rows, so its old files would survive — deleted keys would
-    # resurrect. Remove those partition directories explicitly (Hadoop
-    # FS API, so HDFS/S3A work the same as local). The collect here is
-    # bounded by the EMPTIED-partition count (normally ~0), not the
-    # touched count.
-    emptied = (
-        touched_df.join(
-            merged.select("volume", "bucket").distinct(), ["volume", "bucket"], "left_anti"
-        ).collect()
-    )
-    merged.unpersist()
-    touched_df.unpersist()
+    # resurrect. Find those partitions from the leaf before the write and
+    # remove their directories after it (Hadoop FS API, so HDFS/S3A work
+    # the same as local). The collect is bounded by the EMPTIED-partition
+    # count (normally ~0), not the touched count.
+    emptied = touched_df.join(
+        merged.select("volume", "bucket").distinct(), ["volume", "bucket"], "left_anti"
+    ).collect()
+    try:
+        (
+            merged.repartition("volume", "bucket")
+            .sortWithinPartitions("key")
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("volume", "bucket")
+            .parquet(snapshot_dir)
+        )
+    finally:
+        # Dataset.unpersist does not release a localCheckpoint's blocks;
+        # the checkpointed RDD under the leaf does
+        merged._jdf.queryExecution().analyzed().rdd().unpersist(False)
     jvm = spark._jvm
     hconf = spark._jsc.hadoopConfiguration()
     for r in emptied:
