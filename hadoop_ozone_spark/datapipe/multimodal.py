@@ -341,86 +341,38 @@ NEAR_DUP_BANDS = 4       # 63 bits -> 16/16/16/15-bit bands
 NEAR_DUP_MAX_HAMMING = 6
 
 
-def _thumb_gray(d, x, y, bright: int):
-    """Grayscale law of the synthetic thumbnail corpus: a per-doc base
-    level, a vertical step edge at ex(d), a horizontal step edge at
-    ey(d), and a doc-keyed x-texture — smooth enough that perceptual
-    hashing is meaningful, varied enough that distinct docs land in
-    distinct hash classes. All values stay in 33..123 (printable
-    ASCII), so the encoded payload is one byte per sample. Accepts
-    Columns or ints for x/y (the synthesizer passes Columns, the
-    DuckDB twin generator mirrors this formula with ints)."""
-    ex = F.lit(1) + d % 6
-    ey = F.lit(1) + F.floor(d / 6).cast("long") % 6
-    x = F.lit(x) if isinstance(x, int) else x
-    y = F.lit(y) if isinstance(y, int) else y
-    return (
-        F.lit(33 + bright)
-        + d % 38
-        + F.when(x >= ex, F.lit(24)).otherwise(F.lit(0))
-        + F.when(y >= ey, F.lit(12)).otherwise(F.lit(0))
-        + ((x * (F.lit(2) + d % 5) + d % 7) % 4) * 2
-        + (x * (F.lit(3) + F.floor(d / 7).cast("long") % 4)
-           + F.floor(d / 5).cast("long") % 5) % 3
-    )
-
-
-def _thumb_payload(w: int, h: int, bright: int):
+def _thumb_payload(w: int, h: int, bright: int, deep: bool = False):
     """P6 payload Column for one w x h thumbnail of the doc on this
-    row: header + w*h RGB samples (r = g = b = gray). Memoized per
-    (w, h, bright) — pure Column over doc_id, same rationale as
-    _DHASH_MEMO."""
-    key = ("payload", w, h, bright)
-    hit = _THUMB_PAYLOAD_MEMO.get(key)
-    if hit is not None:
-        return hit
-    d = F.col("doc_id")
+    row: header + w*h RGB samples (r = g = b = gray), one SQL string so
+    the synthesizer builds it in one py4j call.
 
-    def px(p):
-        c = F.char(_thumb_gray(d, p % w, F.floor(p / w).cast("long"), bright))
-        return F.concat(c, c, c)
+    The grayscale law of the synthetic corpus: a per-doc base level, a
+    vertical step edge at ex(d), a horizontal step edge at ey(d), and a
+    doc-keyed x-texture — smooth enough that perceptual hashing is
+    meaningful, varied enough that distinct docs land in distinct hash
+    classes. All values stay in 33..123 (printable ASCII), so the
+    encoded payload is one byte per sample.
 
-    out = F.encode(
-        F.concat(
-            F.lit(f"P6\n{w} {h}\n255\n"),
-            F.array_join(
-                F.transform(F.sequence(F.lit(0), F.lit(w * h - 1)), px), ""
-            ),
-        ),
-        "UTF-8",
-    )
-    _THUMB_PAYLOAD_MEMO[key] = out
-    return out
-
-
-def _thumb_payload_deep(w: int, h: int, bright: int):
-    """16-BIT P6 payload Column: maxval 65535, every sample the 2-byte
+    ``deep``: a 16-BIT P6 (maxval 65535), every sample the 2-byte
     big-endian value gray * 257 = (gray << 8) | gray — the canonical
     8->16-bit depth expansion, so the high byte IS the 8-bit gray and
-    the decode route hashes it identically to the 8-bit twin.
-    Memoized per (w, h, bright), the _thumb_payload rationale."""
-    key = ("deep", w, h, bright)
-    hit = _THUMB_PAYLOAD_MEMO.get(key)
-    if hit is not None:
-        return hit
-    d = F.col("doc_id")
-
-    def px(p):
-        c = F.char(_thumb_gray(d, p % w, F.floor(p / w).cast("long"), bright))
-        # (high, low) x (r, g, b) — all six bytes equal char(gray)
-        return F.concat(c, c, c, c, c, c)
-
-    out = F.encode(
-        F.concat(
-            F.lit(f"P6\n{w} {h}\n65535\n"),
-            F.array_join(
-                F.transform(F.sequence(F.lit(0), F.lit(w * h - 1)), px), ""
-            ),
-        ),
-        "UTF-8",
+    the decode route hashes it identically to the 8-bit twin."""
+    maxval, reps = (65535, 6) if deep else (255, 3)
+    x, y = f"(p % {w})", f"floor(p / {w})"
+    gray = (
+        f"{33 + bright} + doc_id % 38"
+        f" + CASE WHEN {x} >= 1 + doc_id % 6 THEN 24 ELSE 0 END"
+        f" + CASE WHEN {y} >= 1 + floor(doc_id / 6) % 6 THEN 12 ELSE 0 END"
+        f" + (({x} * (2 + doc_id % 5) + doc_id % 7) % 4) * 2"
+        f" + ({x} * (3 + floor(doc_id / 7) % 4) + floor(doc_id / 5) % 5) % 3"
     )
-    _THUMB_PAYLOAD_MEMO[key] = out
-    return out
+    # the header's newlines are literal characters inside the SQL
+    # string literal, so no escape processing is involved
+    return F.expr(
+        f"encode(concat('P6\n{w} {h}\n{maxval}\n', array_join("
+        f"transform(sequence(0, {w * h - 1}), p -> repeat(char({gray}), {reps})),"
+        " '')), 'UTF-8')"
+    )
 
 
 def synthesize_thumbnails(docs: DataFrame, deep: bool = False) -> DataFrame:
@@ -455,28 +407,25 @@ def synthesize_thumbnails(docs: DataFrame, deep: bool = False) -> DataFrame:
     out = base.unionByName(bright).unionByName(crop)
     if deep:
         deep16 = imgs.filter(d % 11 == 0).select(
-            "doc_id", _thumb_payload_deep(8, 8, 0).alias("content")
+            "doc_id", _thumb_payload(8, 8, 0, deep=True).alias("content")
         ).withColumn("doc_id", d + 9_000_000)
         out = out.unionByName(deep16)
     return out
 
 
-# Column-construction memos (optimization r13, guide §1/§7.3 — driver
-# work): media_dhash builds a multi-thousand-node Column tree through
-# py4j (64 samples x the inlined header regex trees); CONSTRUCTION
-# alone measured 11-43s of pure driver time per call at sf0.1 (the
-# JVM-side analysis/canonicalization is milliseconds). The expression
-# is a pure function of the input column — Columns are immutable and
-# session-independent — so build it once per process and reuse. Keyed
-# by str(content) so distinct input expressions still get distinct trees.
-_DHASH_MEMO: dict[str, "F.Column"] = {}
-_THUMB_PAYLOAD_MEMO: dict[tuple, "F.Column"] = {}
+# anchored P6 header grammar over the HEX of the payload's 32-byte
+# prefix (any sane P6 header fits: "P6\n9999 9999\n255\n" is 17 bytes):
+# magic "P6\n" = 50360A, ASCII digits = 3X pairs, space = 20, newline =
+# 0A; groups 1-3 are width, height, maxval
+_PPM_HEADER_HEX = r"^50360A((?:3[0-9])+)20((?:3[0-9])+)0A((?:3[0-9])+)0A"
 
 
-def media_dhash(content) -> "F.Column":
-    """63-bit perceptual hash of a P6 PPM payload, pure Column
-    expressions end-to-end: parse the header (magic / 'w h' / maxval
-    lines), point-sample the raster's red channel on an 8x8 grid
+def media_dhash_frame(
+    thumbs: DataFrame, content_col: str = "content"
+) -> DataFrame:
+    """(doc_id, dhash): the 63-bit perceptual hash of each row's P6 PPM
+    payload. Parse the header (magic / 'w h' / maxval lines),
+    point-sample the raster's red channel on an 8x8 grid
     (sx(i) = i*(w-1) div 7, sy(j) = j*(h-1) div 7 — any w x h image
     hashes onto the same grid), then
 
@@ -486,6 +435,20 @@ def media_dhash(content) -> "F.Column":
 
     63 bits keep the hash in one non-negative BIGINT for cheap
     xor/bit_count verify in both engines.
+
+    Shape: three small projections, each one SQL string —
+    1. the four header scalars (w, h, maxval, raster offset), parsed
+       once per row by one anchored regex;
+    2. the 64 samples as one ``transform`` over ``sequence(0, 63)``;
+    3. the 63 bits as one ``aggregate`` over ``sequence(0, 62)``,
+       times the maxval NULL mask.
+    The lambdas hold only an offset and a bit test over header
+    columns, so the plan stays a few dozen nodes and the task closure
+    small. Filter on ``dhash`` only above a checkpoint or persist of
+    this frame (media_dhash_frame_routed): predicate pushdown
+    substitutes the projections into the predicate, where the bit fold
+    re-evaluates the whole sample lambda for every bit (a NULL filter
+    placed below the persist ran for minutes at sf0.001).
 
     BINARY-safe end-to-end: real media bytes >= 0x80 are not valid
     one-byte UTF-8, and Spark 4's decode() THROWS on malformed input
@@ -501,108 +464,61 @@ def media_dhash(content) -> "F.Column":
     Every 1-byte maxval is indexable — gradient SIGNS are invariant
     under the 255/maxval intensity rescale, so sub-255 maxval hashes
     are valid dHashes, not approximations. A 16-bit image would
-    silently hash interleaved high/low bytes, so the guard NULLs the
+    silently hash interleaved high/low bytes, so the mask NULLs the
     hash when maxval > 255 (and on an unparseable header, where the
     regex yields NULL) — loud failure, never a silent wrong hash; the
     caller counts the NULLs via media_unsupported_report and routes
     them through the mapInPandas decode boundary
     (media_dhash_frame_routed), where 2-byte samples decode to their
-    high byte and rejoin the same hash law.
+    high byte and rejoin the same hash law. The character-indexed form
+    this replaced survives as _media_dhash_utf8 for the sub-0x80
+    agreement pin."""
 
-    Expression shape (ADVICE r11, resolved by measurement): the header
-    sub-expressions are deliberately INLINED into every sample. This
-    projection whole-stage-codegens with subexpression elimination
-    active — the generated stage evaluates RegExpExtract exactly 3+1
-    times total (w/h/raster_off/maxval once each, 154 subExpr
-    functions), so no repeated regex work survives at runtime. Both
-    "hoist" alternatives measured strictly worse: a struct column is
-    re-inlined by CollapseProject + SimplifyExtractValueOps into all 64
-    samples (4 regex trees per sample) and OOMs plan canonicalization
-    at default driver heap; a transform(array(struct), ...) lambda
-    binding keeps the logical tree small but is CodegenFallback — the
-    interpreted ArrayTransform Java-serializes a ~20 MB task closure
-    per stage and OOMs executors. The character-indexed form this
-    replaced survives as _media_dhash_utf8 for the sub-0x80 agreement
-    pin."""
-    from functools import reduce
-    from operator import add
-
-    memo_key = str(content)
-    hit = _DHASH_MEMO.get(memo_key)
-    if hit is not None:
-        return hit
-
-    # header parse on the HEX of a 32-byte prefix (any sane P6 header
-    # fits: "P6\n9999 9999\n255\n" is 17 bytes) — never decoded. In hex
-    # the grammar is exact and byte-aligned by anchoring at ^: magic
-    # "P6\n" = 50360A, ASCII digits = 3X pairs, space = 20, newline =
-    # 0A. One anchored regex keeps the expression tree small enough
-    # for codegen (a structural transform/filter parse here blew the
-    # 64-sample tree up past compilability).
-    hx = F.hex(content.substr(F.lit(1), F.lit(32)))
-    hdr_pat = r"^50360A((?:3[0-9])+)20((?:3[0-9])+)0A((?:3[0-9])+)0A"
-
-    def _digits(group: int):
+    def digits(group: int) -> str:
         # "38" "30" hex-digit pairs -> "80" -> long; try_cast because a
         # non-matching header extracts '' and ANSI cast THROWS on it —
-        # an unparseable payload must surface as the guard's NULL (the
-        # loud-but-isolated lane), not kill the whole stage
-        return F.regexp_replace(
-            F.regexp_extract(hx, hdr_pat, group), "3(.)", "$1"
-        ).try_cast("long")
-
-    w = _digits(1)
-    h = _digits(2)
-    # full header match length in hex chars / 2 = header bytes =
-    # 0-based byte offset of the first raster byte
-    raster_off = (F.length(F.regexp_extract(hx, hdr_pat, 0)) / 2).cast("long")
-
-    def sample(i: int, j: int):
-        sx = F.floor(F.lit(i) * (w - 1) / 7).cast("long")
-        sy = F.floor(F.lit(j) * (h - 1) / 7).cast("long")
-        byte = content.substr(raster_off + (sy * w + sx) * 3 + 1, F.lit(1))
-        return F.conv(F.hex(byte), 16, 10).cast("long")
-
-    grid = [[sample(i, j) for i in range(THUMB_GRID)] for j in range(THUMB_GRID)]
-    bits = []
-    for j in range(THUMB_GRID):
-        for i in range(THUMB_GRID - 1):
-            k = j * (THUMB_GRID - 1) + i
-            bits.append(
-                F.when(grid[j][i + 1] > grid[j][i], F.lit(1 << k)).otherwise(
-                    F.lit(0)
-                )
-            )
-    for j in range(THUMB_VBITS):
-        bits.append(
-            F.when(grid[j + 1][0] > grid[j][0], F.lit(1 << (THUMB_HBITS + j)))
-            .otherwise(F.lit(0))
+        # an unparseable payload must surface as the mask's NULL, not
+        # kill the whole stage
+        return (
+            f"try_cast(regexp_replace(regexp_extract(hex(substr(c, 1, 32)),"
+            f" '{_PPM_HEADER_HEX}', {group}), '3(.)', '$1') AS BIGINT)"
         )
-    # The guard is a multiplicative NULL mask, NOT a CASE WHEN around
-    # the bit sum: codegen subexpression elimination skips expressions
-    # that are only conditionally evaluated, so wrapping the 64-sample
-    # tree in a WHEN branch re-inlines every header regex (measured:
-    # 505 RegExpExtract / 4.7 MB generated code vs 4 / 450 KB this
-    # way). hash * WHEN(maxval in 1..255, 1) keeps the sum
-    # unconditional and yields NULL (1 * NULL) exactly when the sample
-    # law is wrong (2-byte samples) or the header failed to parse.
-    out = reduce(add, bits).cast("long") * F.when(
-        _digits(3).between(1, 255), F.lit(1).cast("long")
+
+    header = thumbs.select(
+        "doc_id",
+        F.col(content_col).alias("c"),
+        F.expr(digits(1)).alias("w"),
+        F.expr(digits(2)).alias("h"),
+        F.expr(digits(3)).alias("maxval"),
+        # full header match length in hex chars / 2 = header bytes =
+        # 0-based byte offset of the first raster byte
+        F.expr(
+            f"CAST(length(regexp_extract(hex(substr(c, 1, 32)),"
+            f" '{_PPM_HEADER_HEX}', 0)) / 2 AS BIGINT)"
+        ).alias("off"),
     )
-    _DHASH_MEMO[memo_key] = out
-    return out
-
-
-def media_dhash_frame(
-    thumbs: DataFrame, content_col: str = "content"
-) -> DataFrame:
-    """(doc_id, dhash): the production hash pass. Rows whose payload
-    the sample law cannot index (maxval > 255, i.e. 2-byte samples, or
-    an unparseable header) carry dhash = NULL — callers count them
-    (media_unsupported_report) and route them through the decode
-    boundary (media_dhash_frame_routed) or filter them explicitly."""
-    return thumbs.select(
-        "doc_id", media_dhash(F.col(content_col)).alias("dhash")
+    # sample p = g[j][i] with j = p div 8, i = p % 8
+    samples = header.select(
+        "doc_id",
+        "maxval",
+        F.expr(
+            "transform(sequence(0, 63), p -> CAST(conv(hex(substr(c,"
+            " off + (floor((p div 8) * (h - 1) / 7) * w"
+            " + floor((p % 8) * (w - 1) / 7)) * 3 + 1, 1)), 16, 10) AS BIGINT))"
+        ).alias("s"),
+    )
+    # bit k < 56: g[j][i+1] > g[j][i] with j = k div 7, i = k % 7;
+    # bit k >= 56: g[k-55][0] > g[k-56][0]. The mask is multiplicative
+    # (1 or NULL), so the hash is NULL exactly when the sample law is
+    # wrong (2-byte samples) or the header failed to parse.
+    return samples.select(
+        "doc_id",
+        F.expr(
+            "aggregate(sequence(0, 62), 0L, (acc, k) -> acc + IF(CASE"
+            " WHEN k < 56 THEN s[(k div 7) * 8 + k % 7 + 1] > s[(k div 7) * 8 + k % 7]"
+            " ELSE s[(k - 55) * 8] > s[(k - 56) * 8] END, shiftleft(1L, k), 0L))"
+            " * CASE WHEN maxval BETWEEN 1 AND 255 THEN 1L END"
+        ).alias("dhash"),
     )
 
 
@@ -610,9 +526,10 @@ def dhash_decoded(payload: bytes) -> int | None:
     """Pure-Python dHash of one P6 payload through the REAL decode
     path: full-grammar header parse, 2-byte samples projected to their
     high byte (decode_ppm's 8-bit law), then the identical 8x8 grid /
-    63-bit gradient-sign layout as media_dhash. On 1-byte payloads this
-    IS media_dhash (pinned in tests); on 2-byte payloads it is the hash
-    the Column form refuses to fake. None on malformed input."""
+    63-bit gradient-sign layout as media_dhash_frame. On 1-byte
+    payloads this IS media_dhash_frame (pinned in tests); on 2-byte
+    payloads it is the hash the fast path refuses to fake. None on
+    malformed input."""
     try:
         w, h, maxval, pos = _parse_ppm_header(payload, 0)
         bps = 2 if maxval > 255 else 1
@@ -652,25 +569,24 @@ def media_dhash_frame_routed(
     media_unsupported_report, which reports the fast path's NULLs.
 
     Shape at scale: the payload column is scanned once for the fast
-    pass (persisted as the bounded (doc_id, dhash) frame under
-    ``tag``); ONE count on that persisted frame decides routing, so a
-    clean corpus (the common case) pays zero extra scans — the plan
-    returned is exactly the pre-routing plan. When stragglers exist,
-    only THEIR doc_ids join back to the payload column (AQE broadcasts
-    the small side) and only their bytes cross the Arrow boundary —
-    Python touches the exception lane, never the corpus. The NULL
-    filter sits above the persist for the same pushdown-duplication
-    reason as media_near_dup_pairs."""
+    pass, checkpointed with scratch.keep_ckpt under ``tag`` as the
+    bounded (doc_id, dhash) frame. ONE count on that frame decides
+    routing, so a clean corpus (the common case) pays zero extra scans
+    — the plan returned is exactly the pre-routing plan. When
+    stragglers exist, only THEIR doc_ids join back to the payload
+    column (AQE broadcasts the small side) and only their bytes cross
+    the Arrow boundary — Python touches the exception lane, never the
+    corpus. The NULL filter sits above the checkpoint for the same
+    pushdown-duplication reason as media_near_dup_pairs."""
     from hadoop_ozone_spark import scratch
 
-    # keep_ckpt, not keep (optimization r13): the hash frame is bounded
-    # (2 columns) but its PLAN embeds the ~10^4-node dHash expression
-    # tree — persisted-only, every downstream action (banding, CC,
-    # label joins) re-optimized that tree on the driver for seconds per
-    # action (measured: 18.75s of inter-job driver gaps vs 2.35s of
-    # executor time on dp_media_dup_clusters at sf0.1). The checkpoint
-    # truncates the plan to a leaf; the data cost is identical (one
-    # materialization of the same bounded frame).
+    # keep_ckpt, not keep: the frame is read twice (the routing count
+    # below, then the caller's query), and under a plain persist every
+    # later action (banding, the CC rounds, the label joins) re-plans
+    # the thumbnail union and the hash projections. Measured on
+    # dp_media_dup_clusters at sf0.1 (fresh session, 4 cores, 3 runs
+    # each): cold 8.1-9.1 s against 8.7-10.3 s, steady 1.4-1.7 s
+    # against 2.2-3.1 s.
     hashes = scratch.keep_ckpt(tag, media_dhash_frame(thumbs, content_col))
     ok = hashes.filter(F.col("dhash").isNotNull())
     # bounded driver-side decision on the persisted 2-column frame
@@ -717,10 +633,10 @@ def _media_dhash_utf8(content) -> "F.Column":
     """The pre-round-11 CHARACTER-indexed dHash: raster samples via
     ascii(substr(decoded, charpos, 1)). Correct only while every
     sample byte is < 0x80 (one UTF-8 char per byte — true for the
-    synthetic corpus by the _thumb_gray 33..123 law); a >= 0x80 byte
+    synthetic corpus by the _thumb_payload 33..123 law); a >= 0x80 byte
     decodes to a replacement char and shifts every later char
     position. Kept as the reference form for the agreement pin in
-    tests: equal to media_dhash on sub-0x80 payloads, provably NOT
+    tests: equal to media_dhash_frame on sub-0x80 payloads, provably NOT
     equal on a planted >= 0x80 image."""
     from functools import reduce
     from operator import add
@@ -777,15 +693,16 @@ def media_near_dup_pairs(
 
     scratch.fresh("media_near_dup")
     # Unsupported payloads (maxval > 255: 2-byte samples) hash to NULL
-    # by the guard in media_dhash and are ROUTED through the decode
+    # by the mask in media_dhash_frame and are ROUTED through the decode
     # boundary (media_dhash_frame_routed, VERDICT r12 #4) — 16-bit
     # images participate in banding via their high-byte dHash instead
     # of being excluded; only payloads the decoder itself rejects stay
     # out, counted by media_unsupported_report. The routed frame keeps
     # the NULL filter ABOVE the persist, never below it: a filter on
     # the computed column pre-persist is pushed under the projection
-    # and duplicates the 64-sample hash expression into the predicate
-    # (measured 2.4s -> 33.1s on the sf0.1 hash build).
+    # and duplicates the hash expression into the predicate (measured
+    # 2.4s -> 33.1s on the sf0.1 hash build of the former 64-sample
+    # Column ladder).
     hashes = media_dhash_frame_routed(thumbs, "media_near_dup")
     return _hash_band_pairs(hashes, max_hamming).orderBy("doc_a", "doc_b")
 

@@ -606,15 +606,6 @@ def bpe_pair_counts(
     )
 
 
-# Pure-Column memo for the BPE loop (the multimodal._DHASH_MEMO
-# rationale): the carry-fold rewrite and the pair-explode Columns are
-# built from FIXED column names (symbols/_ml/_mr), so the ~10^2-node
-# expression trees can be constructed through py4j once per process
-# instead of once per merge round (measured 0.5-3.0s of driver time per
-# round at n_merges=8 — more than the rounds' executor work combined).
-_BPE_COL_MEMO: dict[str, Column] = {}
-
-
 def _apply_merge(symbols: Column, left: Column, right: Column) -> Column:
     """Apply ONE learned BPE merge (left, right) → left||right to a
     symbol array with a single left-to-right fold — the carry scheme:
@@ -712,23 +703,20 @@ def bpe_learn_merges(
     )
     vocab.count()
     merge_rows: list[tuple] = []
-    # round-invariant Columns, built once per process (_BPE_COL_MEMO):
+    # round-invariant Columns over FIXED column names (symbols/_ml/_mr):
     # every round applies the SAME unresolved expressions to a new
-    # vocab frame, so the py4j construction cost must not repeat
-    if "pair_explode" not in _BPE_COL_MEMO:
-        _BPE_COL_MEMO["pair_explode"] = F.explode(
-            F.expr(
-                "transform(sequence(1, size(symbols) - 1),"
-                " i -> struct(symbols[i-1] AS l, symbols[i] AS r))"
-            )
-        ).alias("p")
-        _BPE_COL_MEMO["pair_filter"] = (
-            F.col("p.l").isNotNull() & F.col("p.r").isNotNull()
+    # vocab frame, so they are built once per call, not once per round
+    pair_explode = F.explode(
+        F.expr(
+            "transform(sequence(1, size(symbols) - 1),"
+            " i -> struct(symbols[i-1] AS l, symbols[i] AS r))"
         )
-        _BPE_COL_MEMO["size_guard"] = F.size("symbols") >= 2
-        _BPE_COL_MEMO["rewrite"] = _apply_merge(
-            F.col("symbols"), F.col("_ml"), F.col("_mr")
-        ).alias("symbols")
+    ).alias("p")
+    pair_filter = F.col("p.l").isNotNull() & F.col("p.r").isNotNull()
+    size_guard = F.size("symbols") >= 2
+    rewrite = _apply_merge(
+        F.col("symbols"), F.col("_ml"), F.col("_mr")
+    ).alias("symbols")
     # Merge rounds run over DICTIONARY-sized frames (Heaps'-law vocab),
     # so each round's cost is driver fixed latency, not data: AQE turns
     # every round's winner pick into 2-3 jobs (shuffle-stage
@@ -762,9 +750,9 @@ def bpe_learn_merges(
                 # the size guard also keeps sequence() ascending
                 # (sequence(1,0) DESCENDS in Spark and indexes out of
                 # bounds under ANSI)
-                vocab.filter(_BPE_COL_MEMO["size_guard"])
-                .select("freq", _BPE_COL_MEMO["pair_explode"])
-                .filter(_BPE_COL_MEMO["pair_filter"])
+                vocab.filter(size_guard)
+                .select("freq", pair_explode)
+                .filter(pair_filter)
                 .groupBy(F.col("p.l").alias("left"), F.col("p.r").alias("right"))
                 .agg(F.sum("freq").alias("pair_count"))
             )
@@ -795,7 +783,7 @@ def bpe_learn_merges(
             )
             vocab = (
                 vocab.crossJoin(F.broadcast(winner))
-                .select("word", "freq", _BPE_COL_MEMO["rewrite"])
+                .select("word", "freq", rewrite)
                 .localCheckpoint(eager=False)
             )
     finally:

@@ -4349,10 +4349,11 @@ ORACLES["dp_bpe_vocab"] = DP_BPE_VOCAB_SQL
 
 def dp_media_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Perceptual near-dup over the BINARY media column (VERDICT r9
-    #2): 63-bit dHash computed from the PPM payload bytes with pure
-    integer/bit Column expressions (datapipe/multimodal.py
-    media_dhash), hamming-ball banding for candidates (the minhash
-    band discipline), exact bit_count(xor) verify. The thumbnail
+    #2): 63-bit dHash computed from the PPM payload bytes with SQL
+    higher-order functions over the header columns
+    (datapipe/multimodal.py media_dhash_frame), hamming-ball banding
+    for candidates (the minhash band discipline), exact
+    bit_count(xor) verify. The thumbnail
     corpus plants brightness-perturbed (+9, hamming 0) and
     crop-perturbed (last row dropped, hamming 2) copies; both are
     guaranteed recovered (4 bands cover hamming <= 3 by pigeonhole;
@@ -4365,7 +4366,7 @@ def dp_media_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _media_hashes_ctes(recursive: bool = False, deep: bool = False) -> str:
     """Shared DuckDB CTE prefix replaying synthesize_thumbnails +
-    media_dhash: the ``hashes`` frame is (did, dhash). ``recursive``
+    media_dhash_frame: the ``hashes`` frame is (did, dhash). ``recursive``
     emits WITH RECURSIVE for consumers whose tail needs a fixpoint
     member (the clusters twin's CC). ``deep`` adds the planted 16-bit
     slice (doc_id % 33 = 0 at +9M): its decoded high byte IS the base

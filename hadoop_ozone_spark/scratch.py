@@ -138,21 +138,24 @@ def keep_ckpt(tag: str, df: DataFrame) -> DataFrame:
 
     Why this exists (optimization r13, guide §7.3): persist caches
     DATA but leaves the logical plan intact — a bounded frame whose
-    plan embeds a very large expression tree (the media dHash frame:
-    ~10^4 nodes) makes every downstream action pay seconds of pure
-    driver-side Catalyst time even though the scan itself is cached
-    (measured on dp_media_dup_clusters at sf0.1: 2.35s of executor
-    job time vs 18.75s of inter-job driver gaps; the checkpoint leaf
-    removes the gaps). Use for bounded intermediates with huge plans;
-    plain :func:`keep` is right everywhere else — a checkpoint cannot
-    be recomputed from lineage, so this also inherits the standard
+    plan embeds a very large expression tree (the IVF-PQ encode
+    ladder, the qsketch CASE ladder) makes every downstream action pay
+    seconds of pure driver-side Catalyst time even though the scan
+    itself is cached (measured on the former 64-sample media dHash
+    ladder at sf0.1: 2.35s of executor job time vs 18.75s of
+    inter-job driver gaps; the checkpoint leaf removes the gaps). Use
+    for bounded intermediates with huge plans; plain :func:`keep` is
+    right everywhere else — a checkpoint cannot be recomputed from
+    lineage, so this also inherits the standard
     localCheckpoint durability caveat (on a cluster with executor
     churn, point the session at durable storage and swap in
     ``.checkpoint()``; the law is identical).
 
     Same slot/cursor/same-plan-reuse contract as :func:`keep` — the
     plan comparison runs on the PRE-checkpoint frames, so steady-state
-    invocations reuse one checkpoint instead of re-materializing."""
+    invocations reuse one checkpoint instead of re-materializing. A
+    replaced generation's blocks are released, so a frame an earlier
+    invocation returned over a different plan is no longer readable."""
     key = (_session_key(df), tag)
     i = _CKPT_CURSOR.get(key, 0)
     _CKPT_CURSOR[key] = i + 1
@@ -162,9 +165,11 @@ def keep_ckpt(tag: str, df: DataFrame) -> DataFrame:
         if _same_plan(old_plan, df):
             return old_ckpt  # steady-state: reuse the live checkpoint
         try:
-            old_ckpt.unpersist()
+            # Dataset.unpersist does not release a localCheckpoint's
+            # blocks; the checkpointed RDD under the leaf does
+            old_ckpt._jdf.queryExecution().analyzed().rdd().unpersist(False)
         except Exception:
-            pass  # session gone / already unpersisted
+            pass  # session gone / already released / Spark Connect
         ck = df.localCheckpoint()
         slots[i] = (df, ck)
         return ck

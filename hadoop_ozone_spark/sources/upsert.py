@@ -49,7 +49,15 @@ def apply_events_to_snapshot(
     # files. (Not scratch.keep_ckpt either — its same-plan reuse would
     # serve the previous batch's rows for a byte-identical plan over
     # rewritten files.)
-    merged = kept.select(*cols).unionByName(compacted.select(*cols)).localCheckpoint()
+    #
+    # The events' columns are cast to the plane's types before the
+    # union, so the rewritten partitions keep the schema of the files
+    # beside them. A value the plane's type cannot hold fails the ANSI
+    # cast inside this checkpoint, before anything is written.
+    typed = compacted.select(
+        *[F.col(f.name).cast(f.dataType) for f in snap.schema.fields]
+    )
+    merged = kept.select(*cols).unionByName(typed).localCheckpoint()
     # Dynamic overwrite only replaces partitions PRESENT in the written
     # data. A touched partition whose every row was deleted produces no
     # output rows, so its old files would survive — deleted keys would

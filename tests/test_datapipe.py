@@ -2701,21 +2701,24 @@ def test_media_near_dup_recall_and_law(spark, sf_dir):
 
 
 def test_media_dhash_brightness_invariance_is_exact(spark):
-    """media_dhash is invariant under ANY unclamped brightness shift,
-    not just the planted +9 — pinned by hashing the same thumbnail
-    at three shift levels."""
-    from hadoop_ozone_spark.datapipe import multimodal
-
-    base = spark.range(21, 22).select(F.col("id").alias("doc_id"))
-    hashes = [
-        base.select(
-            multimodal.media_dhash(
-                multimodal._thumb_payload(8, 8, b)
-            ).alias("h")
-        ).first().h
-        for b in (0, 5, 9)
-    ]
-    assert hashes[0] == hashes[1] == hashes[2] > 0
+    """media_dhash_frame is invariant under ANY unclamped brightness
+    shift, not just the planted +9 — pinned by hashing the same
+    thumbnail at three shift levels, materialized as payload bytes."""
+    shifts = (0, 5, 9)
+    row = spark.range(21, 22).select(
+        F.col("id").alias("doc_id")
+    ).select(
+        *[multimodal._thumb_payload(8, 8, b).alias(f"p{b}") for b in shifts]
+    ).first()
+    payloads = spark.createDataFrame(
+        [(b, row[f"p{b}"]) for b in shifts], "doc_id long, content binary"
+    )
+    hashes = {
+        r.doc_id: r.dhash
+        for r in multimodal.media_dhash_frame(payloads).collect()
+    }
+    assert hashes[0] == hashes[5] == hashes[9] > 0
+    assert hashes[0] == _py_dhash(bytes(row.p0))
 
 
 def test_media_dup_clusters_close_pairs_transitively(spark, sf_dir):
@@ -2802,11 +2805,9 @@ def test_media_dhash_is_binary_safe_above_0x80(spark):
     df = spark.createDataFrame(
         [(1, bytearray(payload))], "doc_id long, content binary"
     )
-    got = df.select(
-        multimodal.media_dhash(F.col("content")).alias("h")
-    ).first()
+    got = multimodal.media_dhash_frame(df).first()
     expect = _py_dhash(payload)
-    assert got.h == expect
+    assert got.dhash == expect
     # the character-indexed form cannot even evaluate this payload:
     # ANSI decode rejects the malformed (real-media) byte stream
     with pytest.raises(Exception, match="MALFORMED_CHARACTER_CODING"):
@@ -2845,11 +2846,6 @@ def test_media_dhash_nulls_16bit_maxval(spark):
     assert rows[2] == _py_dhash(bytes(hdr8 + raster8))
     report = multimodal.media_unsupported_report(df).first()
     assert (report.total, report.hashed, report.unsupported) == (2, 2 - 1, 1)
-    # and the single-expression form agrees with the frame form
-    got = df.filter(F.col("doc_id") == 1).select(
-        multimodal.media_dhash(F.col("content")).alias("h")
-    ).first()
-    assert got.h is None
 
 
 def test_media_dhash_sub255_maxval_hashes_on_fast_path(spark):
@@ -2938,40 +2934,206 @@ def test_decode_ppm_projects_two_byte_samples_to_high_byte(spark):
     assert frames[1][2] == [9, 8, 7]
 
 
-def test_media_dhash_frame_matches_expression_form(spark):
-    """The hoisted two-stage frame pass (header struct computed once)
-    is the same function as the single-expression form on every
-    synthetic thumbnail — the ADVICE r11 hoist cannot move a hash."""
-    from hadoop_ozone_spark import model
-
-    sf_dir = "/root/testdata/sf0.001"
-    thumbs = multimodal.synthesize_thumbnails(
-        model.load(spark, sf_dir, "documents")
-    )
-    expr = thumbs.select(
-        "doc_id", multimodal.media_dhash(F.col("content")).alias("dhash")
-    )
-    frame = multimodal.media_dhash_frame(thumbs)
-    assert expr.exceptAll(frame).count() == 0
-    assert frame.exceptAll(expr).count() == 0
-    assert frame.count() > 0
-
-
 def test_media_dhash_byte_and_char_paths_agree_below_0x80(spark):
-    """On sub-0x80 payloads (the synthetic corpus by the _thumb_gray
+    """On sub-0x80 payloads (the synthetic corpus by the _thumb_payload
     33..123 law) the byte-indexed and character-indexed forms are the
     same function — the round-11 sampling change cannot move any
     synthetic-corpus hash."""
     base = spark.range(0, 60, 3).select(F.col("id").alias("doc_id"))
-    rows = base.select(
-        multimodal.media_dhash(
-            multimodal._thumb_payload(8, 8, 0)
-        ).alias("a"),
-        multimodal._media_dhash_utf8(
-            multimodal._thumb_payload(8, 8, 0)
-        ).alias("b"),
+    payloads = spark.createDataFrame(
+        base.select("doc_id", multimodal._thumb_payload(8, 8, 0).alias("c"))
+        .collect(),
+        "doc_id long, content binary",
+    )
+    rows = multimodal.media_dhash_frame(payloads).join(
+        payloads.select(
+            "doc_id",
+            multimodal._media_dhash_utf8(F.col("content")).alias("utf8"),
+        ),
+        "doc_id",
     ).collect()
-    assert rows and all(r.a == r.b for r in rows)
+    assert len(rows) == 20
+    assert all(r.dhash == r.utf8 for r in rows)
+
+
+def _thumb_gray_col(d, x, y, bright: int):
+    """The former Column form of the synthetic grayscale law, kept as
+    the reference _thumb_payload's SQL string is pinned against."""
+    ex = F.lit(1) + d % 6
+    ey = F.lit(1) + F.floor(d / 6).cast("long") % 6
+    return (
+        F.lit(33 + bright)
+        + d % 38
+        + F.when(x >= ex, F.lit(24)).otherwise(F.lit(0))
+        + F.when(y >= ey, F.lit(12)).otherwise(F.lit(0))
+        + ((x * (F.lit(2) + d % 5) + d % 7) % 4) * 2
+        + (x * (F.lit(3) + F.floor(d / 7).cast("long") % 4)
+           + F.floor(d / 5).cast("long") % 5) % 3
+    )
+
+
+def _thumb_payload_col(w: int, h: int, bright: int, deep: bool = False):
+    """The former Column form of _thumb_payload (8-bit: r = g = b =
+    gray; deep: maxval 65535, all six sample bytes char(gray))."""
+    d = F.col("doc_id")
+
+    def px(p):
+        c = F.char(_thumb_gray_col(d, p % w, F.floor(p / w).cast("long"), bright))
+        return F.concat(*[c] * (6 if deep else 3))
+
+    return F.encode(
+        F.concat(
+            F.lit(f"P6\n{w} {h}\n{65535 if deep else 255}\n"),
+            F.array_join(
+                F.transform(F.sequence(F.lit(0), F.lit(w * h - 1)), px), ""
+            ),
+        ),
+        "UTF-8",
+    )
+
+
+def test_thumb_payload_sql_matches_column_form(spark):
+    """The SQL-string payload is byte-identical to the former Column
+    form for every (w, h, bright, deep) variant the synthesizers use
+    (plus the brightness test's +5), over doc_ids covering every
+    residue the grayscale law keys on."""
+    from functools import reduce
+    from operator import and_
+
+    variants = [(8, 8, 0, False), (8, 8, 5, False), (8, 8, 9, False),
+                (8, 7, 0, False), (8, 8, 0, True)]
+    base = spark.range(0, 1260, 1).select(F.col("id").alias("doc_id"))
+    cols = []
+    for i, (w, h, b, deep) in enumerate(variants):
+        cols += [
+            multimodal._thumb_payload(w, h, b, deep).alias(f"new{i}"),
+            _thumb_payload_col(w, h, b, deep).alias(f"old{i}"),
+        ]
+    df = base.select(*cols)
+    same = [F.col(f"new{i}") == F.col(f"old{i}") for i in range(len(variants))]
+    for i in range(len(variants)):
+        assert df.schema[f"new{i}"].dataType == df.schema[f"old{i}"].dataType
+    assert df.filter(~reduce(and_, same)).count() == 0
+
+
+def _media_dhash_ladder(content):
+    """The former Column form of media_dhash_frame: 64 samples, each
+    inlining the header regexes, summed as 63 WHEN bits and NULL-masked
+    outside maxval 1..255. Kept only as the reference the three-
+    projection form is pinned against."""
+    from functools import reduce
+    from operator import add
+
+    hx = F.hex(content.substr(F.lit(1), F.lit(32)))
+    hdr_pat = r"^50360A((?:3[0-9])+)20((?:3[0-9])+)0A((?:3[0-9])+)0A"
+
+    def digits(group: int):
+        return F.regexp_replace(
+            F.regexp_extract(hx, hdr_pat, group), "3(.)", "$1"
+        ).try_cast("long")
+
+    w, h = digits(1), digits(2)
+    raster_off = (F.length(F.regexp_extract(hx, hdr_pat, 0)) / 2).cast("long")
+
+    def sample(i: int, j: int):
+        sx = F.floor(F.lit(i) * (w - 1) / 7).cast("long")
+        sy = F.floor(F.lit(j) * (h - 1) / 7).cast("long")
+        byte = content.substr(raster_off + (sy * w + sx) * 3 + 1, F.lit(1))
+        return F.conv(F.hex(byte), 16, 10).cast("long")
+
+    g = [[sample(i, j) for i in range(8)] for j in range(8)]
+    bits = [
+        F.when(g[j][i + 1] > g[j][i], F.lit(1 << (j * 7 + i))).otherwise(F.lit(0))
+        for j in range(8)
+        for i in range(7)
+    ] + [
+        F.when(g[j + 1][0] > g[j][0], F.lit(1 << (56 + j))).otherwise(F.lit(0))
+        for j in range(7)
+    ]
+    return reduce(add, bits).cast("long") * F.when(
+        digits(3).between(1, 255), F.lit(1).cast("long")
+    )
+
+
+def _ppm(w: int, h: int, maxval: int, gray) -> bytes:
+    """A P6 payload with r = g = b = gray[p] (2-byte big-endian samples
+    when maxval > 255)."""
+    bps = 2 if maxval > 255 else 1
+    raster = b"".join(v.to_bytes(bps, "big") * 3 for v in gray)
+    return f"P6\n{w} {h}\n{maxval}\n".encode() + raster
+
+
+def _threshold_grid() -> list[int]:
+    """8x8 gray values whose horizontal and x = 0 vertical neighbours
+    differ by exactly -1, 0 or +1, each case many times, around 0x80."""
+    col0 = [128]
+    for y in range(1, 8):
+        col0.append(col0[-1] + y % 3 - 1)
+    out = []
+    for y in range(8):
+        row = [col0[y]]
+        for x in range(1, 8):
+            row.append(row[-1] + (x + 2 * y) % 3 - 1)
+        out += row
+    return out
+
+
+def test_media_dhash_frame_matches_ladder_and_decoded_law(spark):
+    """The three-projection media_dhash_frame equals the former Column
+    ladder and the pure-Python laws (_py_dhash, dhash_decoded) on the
+    edge payloads: gradient thresholds -1/0/+1, NULL content,
+    unparseable headers, maxval 1/254/255/256, an 8x7 crop, a 1x1
+    image and a 13x9 image that resamples onto the grid."""
+    grid = _threshold_grid()
+    payloads = {
+        1: _ppm(8, 8, 255, grid),
+        2: _ppm(8, 8, 255, [v + 1 for v in grid]),
+        3: None,
+        4: b"not a ppm at all",
+        5: b"P6\n8 x\n255\n" + bytes(192),
+        6: _ppm(8, 8, 1, [(p * 5 // 3) % 2 for p in range(64)]),
+        7: _ppm(8, 8, 254, [(41 * p) % 255 for p in range(64)]),
+        8: _ppm(8, 8, 255, [(97 * p + 13) % 256 for p in range(64)]),
+        9: _ppm(8, 8, 256, [(97 * p + 13) % 257 for p in range(64)]),
+        10: _ppm(8, 7, 255, [(37 * p + 5) % 256 for p in range(56)]),
+        11: _ppm(1, 1, 255, [200]),
+        12: _ppm(13, 9, 255, [(29 * p + 3) % 256 for p in range(117)]),
+    }
+    df = spark.createDataFrame(
+        [(d, None if c is None else bytearray(c)) for d, c in payloads.items()],
+        "doc_id long, content binary",
+    )
+    rows = multimodal.media_dhash_frame(df).join(
+        df.select("doc_id", _media_dhash_ladder(F.col("content")).alias("ladder")),
+        "doc_id",
+    ).collect()
+    got = {r.doc_id: r.dhash for r in rows}
+    assert len(got) == len(payloads)
+    assert all(r.dhash == r.ladder for r in rows)
+    for d in (1, 2, 6, 7, 8, 10, 11, 12):
+        assert got[d] is not None
+        assert got[d] == _py_dhash(payloads[d]) == multimodal.dhash_decoded(payloads[d]), d
+    assert got[1] == got[2] and got[1] > 0  # brightness +1 moves no bit
+    assert got[11] == 0
+    # 2-byte samples, no payload and unparseable headers take the mask
+    for d in (3, 4, 5, 9):
+        assert got[d] is None, d
+    assert multimodal.dhash_decoded(payloads[9]) is not None
+    assert multimodal.dhash_decoded(payloads[4]) is None
+
+
+def test_media_dhash_frame_plan_is_small(spark):
+    """The hash is three small projections: the analyzed plan parses
+    the header with at most 4 regex extracts and samples the raster in
+    one lambda, with no Python-generated per-sample ladder."""
+    df = spark.createDataFrame(
+        [(1, bytearray(_ppm(1, 1, 255, [7])))], "doc_id long, content binary"
+    )
+    analyzed = multimodal.media_dhash_frame(df)._jdf.queryExecution().analyzed()
+    text = analyzed.toString()
+    assert text.count("regexp_extract(") <= 4
+    assert text.count("conv(") == 1
+    assert text.count("shiftleft(") == 1
 
 
 def test_bpe_learn_merges_degenerate_corpora(spark):

@@ -756,10 +756,11 @@ def test_media_null_filter_never_pushes_into_hash_projection(spark, sf_dir):
     # Round 12: the unsupported-payload NULL filter must sit ABOVE the
     # persisted hash frame, never below it — Catalyst pushes a filter
     # on the computed column under the projection, duplicating the
-    # 64-sample dHash expression into the predicate (measured 2.4s ->
-    # 33.1s on the sf0.1 hash build). In the correct plan every Filter
-    # that checks dhash NULLness references the COLUMN, not the
-    # re-inlined conv(hex(substr ...)) sample expression.
+    # dHash expression into the predicate (measured 2.4s -> 33.1s on
+    # the sf0.1 hash build of the former 64-sample ladder). In the
+    # correct plan the NULL filter references the dhash COLUMN, and no
+    # Filter carries the re-inlined bit fold, sample lambda or header
+    # parse.
     from hadoop_ozone_spark.datapipe import multimodal
 
     docs = model.load(spark, sf_dir, "documents")
@@ -769,6 +770,8 @@ def test_media_null_filter_never_pushes_into_hash_projection(spark, sf_dir):
         multimodal.media_dup_clusters(thumbs),
     ):
         p = plan_of(df)
+        assert "isnotnull(dhash" in p
         for line in p.splitlines():
-            if "isnotnull(dhash" in line:
-                assert "conv(hex(" not in line, line[:200]
+            if "Filter" in line:
+                for marker in ("aggregate(", "conv(hex(", "regexp_extract("):
+                    assert marker not in line, line[:200]

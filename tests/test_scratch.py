@@ -59,6 +59,28 @@ def test_keep_ckpt_returns_leaf_and_reuses(spark):
     assert c is not a  # plan change: new generation
 
 
+def test_keep_ckpt_replacement_releases_previous_checkpoint(spark):
+    """Replacing a slot frees the old localCheckpoint's blocks, which
+    Dataset.unpersist alone does not: the old checkpoint's RDD leaves
+    the persistent-RDD registry and the new one is live."""
+
+    def persistent():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    def rdd_id(ck):
+        return ck._jdf.queryExecution().analyzed().rdd().id()
+
+    scratch.fresh("t_ckpt_rel")
+    old = scratch.keep_ckpt("t_ckpt_rel", _agg(spark, 300))
+    assert rdd_id(old) in persistent()
+    scratch.fresh("t_ckpt_rel")
+    c = scratch.keep_ckpt("t_ckpt_rel", _agg(spark, 400))
+    after = persistent()
+    assert rdd_id(old) not in after
+    assert rdd_id(c) in after
+    assert c.count() == 7  # the new generation is live
+
+
 def test_session_key_detects_spark_connect_explicitly(spark, monkeypatch):
     from hadoop_ozone_spark import model
     from hadoop_ozone_spark.sources import deployment

@@ -114,6 +114,10 @@ def _replay(rows, events):
     return sorted(state.values())
 
 
+def _persistent_rdd_ids(spark):
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
 def _partition_dirs(root):
     return {
         (v.split("=", 1)[1], b.split("=", 1)[1])
@@ -131,12 +135,14 @@ def test_apply_events_matches_relational_replay(spark, case):
     try:
         snap = f"{tmp}/snap"
         snapshot.write_snapshot(spark.createDataFrame(SNAP_ROWS, SCHEMA), snap)
-        held = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+        held = _persistent_rdd_ids(spark)
         upsert.apply_events_to_snapshot(
             spark, snap, spark.createDataFrame(events, EVENT_SCHEMA)
         )
-        # the merge's checkpoint blocks are released
-        assert spark.sparkContext._jsc.sc().getPersistentRDDs().size() == held
+        # the merge's checkpoint blocks are released: no RDD the call
+        # persisted is still registered (a subset, not an equal count —
+        # the ContextCleaner may drop earlier tests' RDDs meanwhile)
+        assert _persistent_rdd_ids(spark) <= held
         got = sorted(
             tuple(r)
             for r in spark.read.parquet(snap)
@@ -148,6 +154,75 @@ def test_apply_events_matches_relational_replay(spark, case):
         # every partition on disk holds rows: emptied ones are removed,
         # new ones are created
         assert _partition_dirs(snap) == {(r[0], r[1]) for r in want}
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+TYPED_SCHEMA = SCHEMA + ", replication_factor int"
+# events as createDataFrame infers them: replication_factor is bigint
+TYPED_EVENT_SCHEMA = EVENT_SCHEMA + ", replication_factor long"
+
+
+def _typed_snapshot(spark, root):
+    rows = [r + (3,) for r in SNAP_ROWS]
+    snapshot.write_snapshot(spark.createDataFrame(rows, TYPED_SCHEMA), root)
+
+
+def _files(root):
+    return {
+        os.path.join(d, f): os.stat(os.path.join(d, f)).st_mtime_ns
+        for d, _, fs in os.walk(root)
+        for f in fs
+    }
+
+
+def test_upsert_keeps_the_plane_schema_for_wider_event_types(spark):
+    """A bigint replication_factor batch merges into an INT32 plane:
+    the rewritten partition stays INT32 beside the untouched ones, so
+    the plane reads back as one schema."""
+    import pyarrow.parquet as pq
+
+    tmp = tempfile.mkdtemp(prefix="ozspark_typed_")
+    try:
+        snap = f"{tmp}/snap"
+        _typed_snapshot(spark, snap)
+        events = spark.createDataFrame(
+            [(1, "PUT", "v1", "b1", "a/k7", "/v1/b1/a/k7", 70, 2)],
+            TYPED_EVENT_SCHEMA,
+        )
+        upsert.apply_events_to_snapshot(spark, snap, events)
+        plane = spark.read.parquet(snap)
+        assert dict(plane.dtypes)["replication_factor"] == "int"
+        got = {r.row_key: r.replication_factor for r in plane.collect()}
+        assert got["/v1/b1/a/k7"] == 2 and got["/v2/b1/a/k4"] == 3
+        assert len(got) == len(SNAP_ROWS) + 1
+        touched = f"{snap}/volume=v1/bucket=b1"
+        for f in os.listdir(touched):
+            if f.endswith(".parquet"):
+                typ = pq.read_schema(os.path.join(touched, f)).field(
+                    "replication_factor"
+                ).type
+                assert str(typ) == "int32", f
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def test_upsert_out_of_range_value_fails_before_any_write(spark):
+    """A replication_factor above 2^31 cannot be held by the INT32
+    plane: the ANSI cast fails inside the merge checkpoint, and no file
+    under the snapshot changes."""
+    tmp = tempfile.mkdtemp(prefix="ozspark_overflow_")
+    try:
+        snap = f"{tmp}/snap"
+        _typed_snapshot(spark, snap)
+        before = _files(snap)
+        events = spark.createDataFrame(
+            [(1, "PUT", "v1", "b1", "a/k7", "/v1/b1/a/k7", 70, 2**31 + 5)],
+            TYPED_EVENT_SCHEMA,
+        )
+        with pytest.raises(Exception, match="CAST_OVERFLOW"):
+            upsert.apply_events_to_snapshot(spark, snap, events)
+        assert _files(snap) == before
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
